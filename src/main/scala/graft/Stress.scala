@@ -1,1312 +1,116 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit}
 
-import graft.operators.{Dedup, Ingest, Similarity, TextAnalysis}
-
-/** Scale stress harness: multiplies the documents / embeddings corpora
-  * 10x (id-offset copies) and times the heavy candidate-pair operators.
-  * The copies are exact duplicates, which is the dedup worst case: every
-  * LSH bucket holds all replicas, so the pair stage processes C(10,2)=45
-  * verified pairs per original document.
+/** Scale stress harness: `Stress <sfDir> <factor> [name-substring...]`.
   *
-  * Usage: Stress <sfDir> [factor]
+  *  1. Writes one replicated copy of the scale directory ([[replicate]]).
+  *  2. Times [[SparkEntry.prebuildSubstrates]] on the copy as one line.
+  *  3. Runs every registered query whose name contains one of the filters
+  *     (all of them when none are given) through the noop sink, as
+  *     [[Bench]] does, and prints its seconds plus a row count taken
+  *     outside the timed region.
+  *
+  * Replicas are exact copies under fresh keys, which is the dedup worst
+  * case: every LSH bucket holds all replicas, so a raw pair stage emits
+  * C(factor, 2) echoes per original document.
   */
 object Stress {
+
+  /** Replica k adds k * offset to each listed key column. Tables not
+    * listed (region, nation, supplier, part) stay one copy, so supplier
+    * hubs gain degree with the factor. */
+  val keyOffsets: Map[String, Seq[(String, Long)]] = Map(
+    "customer" -> Seq("c_custkey" -> 10000000L),
+    "orders" -> Seq("o_orderkey" -> 100000000L, "o_custkey" -> 10000000L),
+    "lineitem" -> Seq("l_orderkey" -> 100000000L),
+    "events" -> Seq("event_id" -> 100000000L, "user_id" -> 1000000L),
+    "documents" -> Seq("doc_id" -> 10000000L),
+    "embeddings" -> Seq("vec_id" -> 10000000L))
+
+  /** Largest factor a query runs at. Raw pair-emitting near-dedup is
+    * O(factor²) pairs per replica cluster by construction, so past 50 its
+    * output dominates the run without adding signal; raw edit distance
+    * also pays an O(len²) DP per surviving pair, so it stops at 10. The
+    * staged forms (q_dedup_staged and kin) run at every factor. */
+  val maxFactor: Map[String, Int] = Seq(
+    "q_cluster_sizes", "q_cluster_split", "q_dedup_clusters",
+    "q_dedup_clusters_star", "q_dedup_keep_best", "q_dedup_minhash",
+    "q_dedup_minhash_portable", "q_dedup_profile", "q_dedup_simhash",
+    "q_dedup_simhash_portable", "q_embed_neardup", "q_minhash_calibration",
+    "q_ngram_jaccard", "q_simhash_calibration", "q_text_semdedup")
+    .map(_ -> 50).toMap + ("q_dedup_editdist" -> 10)
+
+  /** Writes `factor` copies of every [[keyOffsets]] table of `src` (one
+    * copy of the rest) to `dst`, one parquet directory per table. Copy 0
+    * is the source itself. Copies k ≥ 1 of `orders`, and their `lineitem`
+    * rows, keep only orders dated before [[SparkEntry.incrCut]], so the
+    * incremental and day-close family grows its base graph with the
+    * factor while its delta stays one copy. */
+  def replicate(spark: SparkSession, src: String, dst: String,
+      factor: Int): Unit = {
+    val preCut = col("o_orderdate") < lit(SparkEntry.incrCut)
+    val preCutKeys = Tables.orders(spark, src).where(preCut)
+      .select(col("o_orderkey"))
+    Tables.names.foreach { name =>
+      val base = Tables.table(spark, src, name)
+      val copies = keyOffsets.get(name).fold(Seq(base)) { keys =>
+        (0 until factor).map { k =>
+          val rows = name match {
+            case _ if k == 0 => base
+            case "orders" => base.where(preCut)
+            case "lineitem" => base.join(preCutKeys,
+              col("l_orderkey") === col("o_orderkey"), "left_semi")
+            case _ => base
+          }
+          keys.foldLeft(rows) { case (df, (c, offset)) =>
+            df.withColumn(c, col(c) + lit(k * offset))
+          }
+        }
+      }
+      copies.reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$dst/$name.parquet")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val factor = if (args.length > 1) args(1).toInt else 10
-    // optional op-name substring filters: Stress <sfDir> <factor> [name...]
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    require(args.length >= 2,
+      "usage: Stress <sfDir> <factor> [name-substring...]")
+    val sfDir = args(0)
+    val factor = args(1).toInt
+    require(factor >= 1, s"factor must be at least 1, got $factor")
+    val only = args.drop(2).toSeq
+    val spark = Session.local()
+    val dir = s"/tmp/graft_stress_${SparkEntry.dirTag(sfDir)}_x$factor"
+    replicate(spark, sfDir, dir, factor)
+    println(s"$sfDir x$factor -> $dir: " + Tables.names.map(n =>
+      s"$n=${Tables.table(spark, dir, n).count()}").mkString(" "))
+    val t0 = System.nanoTime()
+    SparkEntry.prebuildSubstrates(spark, dir)
+    println(f"${"prebuild_substrates"}%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
 
-    // Materialize the multiplied corpora once so operator timings don't
-    // include a `factor`-way union of re-scans of the same file.
-    def times(base: DataFrame, idCol: String, offset: Long, path: String): DataFrame = {
-      (0 until factor).map { k =>
-        base.withColumn(idCol, col(idCol) + lit(k * offset))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    }
-
-    val docs = times(Tables.documents(spark, sfDir)
-      .select("doc_id", "text", "lang", "source"), "doc_id", 10000000L,
-      "/tmp/graft_stress_docs")
-    val embs = times(Tables.embeddings(spark, sfDir), "vec_id", 10000000L,
-      "/tmp/graft_stress_embs")
-    println(s"docs=${docs.count()} embeddings=${embs.count()}")
-
-    def time(name: String)(df: => DataFrame): Unit = {
-      if (only.nonEmpty && !only.exists(name.contains)) return
-      val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"$name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-    }
-
-    // Raw pair-emitting near-dedup is O(factor^2) pairs per replica
-    // cluster BY CONSTRUCTION (C(factor,2) echoes per original doc) — at
-    // factor > 50 that output dominates the run without adding signal
-    // beyond the 30x point, so the raw variants are skipped and only the
-    // staged pipeline (the shape a real run uses) is timed.
-    val rawPairOps = factor <= 50
-    if (!rawPairOps)
-      println(s"factor=$factor: skipping raw pair-emitting variants (O(factor^2) pair output)")
-
-    if (rawPairOps) time("minhash_neardups") {
-      Dedup.minhashNearDups(docs, k = 64, bands = 16, minSim = 0.5)
-    }
-    // The staged pipeline a real 100 TB run uses (now the registered
-    // q_dedup_staged operator): collapse exact duplicates, materialize
-    // representatives, then near-dedup only those — removes the
-    // C(cluster, 2) LSH pair explosion under heavy replication.
-    time("minhash_staged") {
-      Dedup.stagedNearDups(docs, "/tmp/graft_stress_reps",
-        k = 64, bands = 16, minSim = 0.5)
-    }
-    if (rawPairOps) time("simhash_neardups") {
-      Dedup.simhashNearDups(docs, maxHamming = 3)
-    }
-    if (rawPairOps) time("ngram_jaccard") {
-      Dedup.ngramJaccardPairs(docs, minJaccard = 0.5, maxLenDiff = 40)
-    }
-    // Edit-distance verify inherits minhash's replica-clique worst case
-    // AND pays an O(len^2) DP per NON-IDENTICAL surviving pair (exact
-    // copies settle via the equality short-circuit) — the strongest
-    // case for the staged ordering below. Guarded tighter than the
-    // other raw pair ops: even with the short-circuit the pair volume
-    // itself is O(factor^2).
-    if (factor <= 10) time("editdist_neardups") {
-      Dedup.editDistNearDups(docs, k = 64, bands = 16,
-        minSim = 0.5, minEditSim = 0.8)
-    }
-    time("editdist_staged") {
-      Dedup.stagedEditDistNearDups(docs, "/tmp/graft_stress_editreps",
-        k = 64, bands = 16, minSim = 0.5, minEditSim = 0.8)
-    }
-    // Corpus-linear text operators: one gram scan each; output is
-    // per-doc (nb_quality) or capped per-term (inverted_index), so both
-    // must stay flat-per-doc in the replica factor.
-    // Text-semdedup chain: drop-list output is O(corpus) like semDedup,
-    // but candidate volume within a bucket is O(factor^2) on replica
-    // cliques (14 s @30x, 71 s @100x raw) — same law and same staged
-    // cure (collapse verbatim copies first) as the embedding drop-list.
-    if (rawPairOps) time("text_semdedup") {
-      TextAnalysis.textSemDedup(docs.select(col("doc_id"), col("text")),
-        dim = 64, nPlanes = 8, minCosine = 0.99)
-    }
-    time("text_semdedup_staged") {
-      TextAnalysis.textSemDedupStaged(docs.select(col("doc_id"), col("text")),
-        dim = 64, nPlanes = 8, minCosine = 0.99)
-    }
-    // Semantic cross-corpus leak check: built-in verbatim collapse on
-    // the corpus side, fixed eval set -> output flat in the factor.
-    time("text_cross_leak") {
-      val eval = Tables.documents(spark, sfDir)
-        .select((col("doc_id") + 95000000L).as("doc_id"),
-          array_join(reverse(split(col("text"), " ")), " ").as("text"))
-      TextAnalysis.textCrossLeak(docs.select(col("doc_id"), col("text")),
-        eval, dim = 64, nPlanes = 8, minCosine = 0.99)
-    }
-    time("nb_quality") {
-      TextAnalysis.nbQuality(docs, col("doc_id") % 5 === 0,
-        col("doc_id") % 5 === 1, vocabSize = 500)
-    }
-    time("inverted_index") {
-      TextAnalysis.invertedIndex(docs, maxPostings = 10)
-    }
-    // Gram novelty and unigram KL are corpus-linear by construction:
-    // one gram/token scan, df/count aggregates map-side combined,
-    // bounded per-source output. Under replication every gram's df
-    // multiplies, so novelty collapses toward 0 — the timing (not the
-    // values) is the signal here.
-    time("novelty_profile") {
-      TextAnalysis.noveltyProfile(docs)
-    }
-    time("corpus_divergence") {
-      TextAnalysis.corpusDivergence(docs)
-    }
-    time("exact_dedup") {
-      Dedup.exactDedup(docs)
-    }
-    time("ann_brute_topk") {
-      Similarity.bruteForceTopK(embs.where(col("vec_id") < 8), embs, k = 5)
-    }
-    time("ann_lsh_topk") {
-      Similarity.lshTopK(embs.where(col("vec_id") < 8), embs, k = 5, nPlanes = 8, dim = 64)
-    }
-    time("ann_int8_topk") {
-      Similarity.int8TopK(embs.where(col("vec_id") < 8), embs, k = 5, prefilter = 4)
-    }
-    // quantizer trained once on a 1/5 sample, reused by IVF search and
-    // cell-blocked near-dup — the production shape (train rarely, assign
-    // everywhere)
-    val centroids = graft.operators.Ivf.train(
-      embs.where(col("vec_id") % 5 === 0), k = 64, iters = 2)
-    time("ann_ivf_topk") {
-      graft.operators.Ivf.search(embs.where(col("vec_id") < 8), embs, centroids,
-        nprobe = 2, topK = 5)
-    }
-    // raw pair listing: O(factor^2) pair rows per replica cluster by
-    // construction (r7: 48 s / 2.5M rows at 100x vs the flat staged
-    // cures below) — same guard as the other raw pair-emitting variants
-    if (rawPairOps) time("embed_neardup_cells") {
-      Similarity.nearDupPairs(embs, minCosine = 0.95, centroids, nprobe = 2)
-    }
-    // Same replicated corpus, drop-list semantics: semDedup emits at most
-    // one row per dropped vector, so replica clusters cost O(cluster)
-    // instead of nearDupPairs' O(cluster^2) pair output — the registered
-    // cure for the pair-explosion worst case above.
-    time("semdedup_droplist") {
-      Similarity.semDedup(embs, centroids, minCosine = 0.95)
-    }
-    // Staged semantic dedup, mirroring minhash_staged: collapse bitwise-
-    // identical embeddings to their lowest-id representative FIRST, then
-    // run the quadratic-candidate stage on reps only (the registered
-    // q_semdedup_staged operator).
-    time("semdedup_staged") {
-      Similarity.semDedupStaged(embs.select(col("vec_id"), col("embedding")),
-        centroids, minCosine = 0.95)
-    }
-    // Incremental semantic ingest vs the REPLICATED index: output stays
-    // one row per batch vector whatever the factor; per-vector work
-    // grows only with probed-cell occupancy (the exactness floor), never
-    // with index shuffle volume — the index side never re-pairs.
-    time("semdedup_ingest") {
-      val base = Tables.embeddings(spark, sfDir)
-      val batch = base
-        .select((col("vec_id") + 90000000L).as("vec_id"), col("embedding"))
-        .unionByName(base
-          .select((col("vec_id") + 91000000L).as("vec_id"),
-            transform(col("embedding"),
-              v => (v.cast("double") * lit(1.01)).cast("float")).as("embedding")))
-      Similarity.semIngestChain(embs.select(col("vec_id"), col("embedding")),
-        Seq(batch), centroids, minCosine = 0.95, nprobe = 2)
-    }
-    // PQ: codebooks trained once on the 1/5 sample (train rarely, encode
-    // everywhere); the timed search scans 4-int codes, not 64 floats.
-    val codebooks = graft.operators.Pq.train(
-      embs.where(col("vec_id") % 5 === 0), dim = 64, m = 4, k = 16, iters = 2)
-    time("ann_pq_topk") {
-      graft.operators.Pq.search(embs.where(col("vec_id") < 8), embs, codebooks,
-        dim = 64, topK = 5)
-    }
-    // IVF-PQ: coarse pruning should keep the ranked set bounded by the
-    // probed cells' population — flat-ish like IVF, cheaper per pair.
-    time("ann_ivfpq_topk") {
-      graft.operators.Pq.searchIvfPq(embs.where(col("vec_id") < 8), embs,
-        centroids, codebooks, dim = 64, nprobe = 2, topK = 5)
-    }
-    time("ann_lsh_multiprobe") {
-      Similarity.lshMultiProbeTopK(embs.where(col("vec_id") < 8), embs,
-        k = 5, nPlanes = 8, dim = 64)
-    }
-    time("ann_jl_topk") {
-      Similarity.jlTopK(embs.where(col("vec_id") < 8), embs, k = 5,
-        prefilter = 4, dim = 64, kProj = 8)
-    }
-    // Estimator-trust audits under replication: each is panel- or
-    // k-bounded on one side, so the cost law is LINEAR in the corpus
-    // factor (the audited scan itself), never quadratic — the property
-    // that lets a 100 TB run afford its own trust contracts.
-    time("lsh_calibration") {
-      Similarity.lshCalibration(embs.where(col("vec_id") < 8), embs,
-        nPlanes = 8, dim = 64)
-    }
-    time("ivf_recall_audit") {
-      graft.operators.Ivf.recallAudit(embs.where(col("vec_id") < 8), embs,
-        centroids, nprobes = Seq(1, 2, 4), topK = 5)
-    }
-    // k-center greedy: k sequential scan-speed rounds (1-row pull each) —
-    // wall clock must grow ~linearly in the factor, row output fixed at k.
-    time("kcenter_coreset") {
-      graft.operators.Coreset.kCenter(
-        embs.select(col("vec_id"), col("embedding")), k = 8)
-    }
-    // Cross-corpus leak check: eval side stays fixed-size while the
-    // corpus replicates — candidate volume grows with the corpus' bucket
-    // occupancy only.
-    time("cross_dedup") {
-      val evalSet = docs.where(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 50000000L).as("doc_id"),
-          expr("substring(text, 1, greatest(length(text) - 30, 1))").as("text"))
-      Dedup.crossCorpusNearDups(docs, evalSet, k = 64, bands = 16, minSim = 0.5)
-    }
-    // The staged form collapses the replica clusters before banding, so
-    // the pair output is one row per (leaked text, eval doc) — FLAT in
-    // `factor` where the raw form above grows O(factor) rows per eval doc
-    // (r5 verdict: 11x the output at 100x). This is the variant a real
-    // 100 TB run uses. Eval here comes from the BASE table (the real
-    // shape: a fixed curated benchmark vs a growing corpus), so rows out
-    // must not move between factors at all.
-    time("cross_dedup_staged") {
-      val evalSet = Tables.documents(spark, sfDir)
-        .where(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 50000000L).as("doc_id"),
-          expr("substring(text, 1, greatest(length(text) - 30, 1))").as("text"))
-      Dedup.stagedCrossCorpusNearDups(docs, evalSet,
-        "/tmp/graft_stress_xstaged", k = 64, bands = 16, minSim = 0.5)
-    }
-    // Incremental ingest: the index holds `factor` replicas of every
-    // content (worst-case band-bucket occupancy) while the arriving
-    // batch stays fixed-size — candidate volume grows with occupancy,
-    // but the min-aggregated decisions stay ONE row per batch doc, so
-    // output is FLAT in the factor and corpus text is read only at
-    // index seed time.
-    time("dedup_ingest") {
-      val base = Tables.documents(spark, sfDir)
-      val batch = base
-        .select((col("doc_id") + 90000000L).as("doc_id"), col("text"))
-        .unionByName(base
-          .select((col("doc_id") + 91000000L).as("doc_id"),
-            expr("substring(text, 1, greatest(length(text) - 30, 1))").as("text")))
-      Ingest.ingestChain(
-        Ingest.signatureIndex(docs.select(col("doc_id"), col("text")), 64),
-        Seq(batch))
-    }
-    // The bucketed-layout split of the same ingest: the index build is
-    // the ONE-TIME cost (grows with the corpus), the per-batch decide is
-    // the RECURRING cost — no index-side exchange, so it should grow only
-    // with band-bucket occupancy (candidate checks), never with index
-    // shuffle volume.
-    // build-on-missing (same rule as ensureStressEdges below): a name
-    // filter selecting only the decide must not hit a missing table
-    def ensureStressIndex(): Unit =
-      if (!spark.catalog.tableExists("stress_bidx_hash") ||
-          !spark.catalog.tableExists("stress_bidx_bands"))
-        Ingest.writeBucketedIndex(
-          Ingest.signatureIndex(docs.select(col("doc_id"), col("text")), 64),
-          "stress_bidx", "/tmp/graft_stress_bidx", buckets = 32, k = 64,
-          bands = 16)
-    time("ingest_index_build") {
-      ensureStressIndex()
-      spark.table("stress_bidx_hash")
-    }
-    time("ingest_bucketed_decide") {
-      ensureStressIndex()
-      val base = Tables.documents(spark, sfDir)
-      val batch = base
-        .select((col("doc_id") + 90000000L).as("doc_id"), col("text"))
-        .unionByName(base
-          .select((col("doc_id") + 91000000L).as("doc_id"),
-            expr("substring(text, 1, greatest(length(text) - 30, 1))").as("text")))
-      Ingest.ingestDecisionsBucketed(spark, "stress_bidx",
-        Ingest.signatureIndex(batch, 64).localCheckpoint(),
-        k = 64, bands = 16, minSim = 0.5)
-    }
-    // Contamination ops on the replicated corpus: every doc has `factor`
-    // replicas, so EVERY window is cross-doc duplicated — dup_spans' worst
-    // case, but output stays one row per doc (span-compressed), unlike the
-    // pair-emitting dedups.
-    time("decontam") {
-      val bench = docs.where(col("doc_id") % 20 === 0)
-        .select(col("doc_id"),
-          array_join(slice(split(col("text"), " "), 1, 40), " ").as("text"))
-      graft.operators.Contamination.decontaminate(docs, bench, n = 8)
-    }
-    time("dup_spans") {
-      graft.operators.Contamination.dupSpans(docs, n = 8)
-    }
-    // Maximal-span extents under full replication: every doc is one
-    // all-duplicated run, so output is exactly one span row per doc —
-    // linear in the corpus at any factor (the span compression that the
-    // per-pair suffix-array report lacks).
-    time("max_dup_spans") {
-      graft.operators.Contamination.maxDupSpans(docs, n = 8)
-    }
-    // Per-pair extents under replication: every gram occurs `factor`
-    // times, so at maxOcc = 8 < factor the hotness cap excludes ALL
-    // replica-clique grams and the output must be EMPTY — the cap is
-    // exactly what keeps the pair listing from going C(factor,2)
-    // quadratic; the sparse-tail pairs it exists for don't replicate.
-    time("pair_dup_spans") {
-      graft.operators.Contamination.pairDupSpans(docs, n = 8, maxOcc = 8)
-    }
-    // Containment shares pair_dup_spans' self-limiting rule: replication
-    // multiplies every shingle's df by `factor`, so at maxShingleDf = 8 <
-    // factor no shingle stays rare and the candidate set (hence output)
-    // must be EMPTY — the inverted-index cap is what keeps doc-in-doc
-    // search from enumerating replica cliques.
-    time("containment") {
-      Dedup.containmentPairs(docs, minCont = 0.8, maxShingleDf = 8)
-    }
-    // BPE under replication: training cost is ONE (word, count) aggregate
-    // whose group space (the vocabulary) doesn't grow with replicas, and
-    // application is a scan-speed replace chain — both must scale like a
-    // plain corpus scan.
-    time("token_bpe") {
-      graft.operators.Bpe.tokenCounts(docs,
-        graft.operators.Bpe.trainMerges(docs, vocabSize = 1000, numMerges = 12))
-    }
-    // vocab coverage under replication: the token TYPE space is fixed (the
-    // replicas add mass, not words), so the top-V vocab, the distinct
-    // (source, token) exchange, and the output are all constant-size — the
-    // whole query must scale like the gram scan.
-    time("vocab_coverage") {
-      graft.operators.TextAnalysis.vocabCoverage(docs, vocabSize = 20)
-    }
-    // Connected components over a near-dup pair graph. The replicated
-    // corpus yields replica CLIQUES — diameter 1, hash-min's good case —
-    // so the two algorithms are compared there only at raw-pair factors;
-    // the synthetic long chain below is the adversarial-diameter case
-    // (progressive edit chains) where hash-min needs O(n) rounds and
-    // only star-contraction stays feasible at any factor.
-    if (rawPairOps) {
-      val pairs = Dedup.ngramJaccardPairs(docs, minJaccard = 0.5, maxLenDiff = 40)
-        .select(col("doc_a"), col("doc_b"))
-      pairs.write.mode("overwrite").parquet("/tmp/graft_stress_pairs")
-      val pairGraph = spark.read.parquet("/tmp/graft_stress_pairs")
-      time("cc_hashmin") { Dedup.dupClusters(pairGraph) }
-      time("cc_star") { Dedup.dupClustersStar(pairGraph) }
-      // keep-policy consumer: output is one row per CLUSTER, so under
-      // replication it stays O(distinct docs) no matter the factor
-      time("cc_keep_best") {
-        Dedup.keepBest(Dedup.dupClusters(pairGraph), docs)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.isEmpty || only.exists(n.contains))
+    var failed = 0
+    names.foreach { name =>
+      maxFactor.get(name).filter(factor > _) match {
+        case Some(max) =>
+          println(f"$name%-32s  skipped (O(factor^2) pair output past x$max)")
+        case None =>
+          try {
+            val q0 = System.nanoTime()
+            val out = SparkEntry.queries(name)(spark, dir)
+            out.write.format("noop").mode("overwrite").save()
+            val t = (System.nanoTime() - q0) / 1e9
+            println(f"$name%-32s $t%8.2f s  (${out.count()} rows)")
+          } catch { case e: Throwable =>
+            failed += 1
+            println(s"$name FAILED: $e")
+          }
       }
     }
-    time(s"cc_star_chain") {
-      val links = 100000L * factor / 10
-      Dedup.dupClustersStar(
-        spark.range(links).select(col("id").as("doc_a"), (col("id") + 1).as("doc_b")),
-        maxIters = 30)
-    }
-    // r4 curation additions. line_dedup's worst case IS replication:
-    // every line of every doc is boilerplate (occurs in `factor` docs
-    // when factor > maxDocs), so the frequent-line set is maximal.
-    time("line_dedup") {
-      Dedup.lineDedup(Dedup.withBoilerplate(docs), maxDocs = 10)
-    }
-    // domain_cap under replication: `factor`x the rows per source, same
-    // source cardinality — the hot-domain shape the two-phase top-N is
-    // built for.
-    time("domain_cap") {
-      graft.operators.Sampling.domainCap(
-        docs.withColumn("n_chars", length(col("text")).cast("long")), cap = 30)
-    }
-    // Bloom decontam: pure projection against the fixed 8 KiB filter —
-    // must scale exactly like the corpus scan, independent of benchmark
-    // size (that's the point of the structure).
-    time("decontam_bloom") {
-      val bench = docs.where(col("doc_id") % 20 === 0)
-        .select(col("doc_id"),
-          array_join(slice(split(col("text"), " "), 1, 40), " ").as("text"))
-      graft.operators.Contamination.decontaminateBloom(docs, bench, n = 8,
-        mBits = 65536, kProbes = 4)
-    }
-    // CMS: the sketch stays d x w rows no matter the corpus factor; the
-    // replication multiplies counts, not cells.
-    time("cms_topk") {
-      graft.operators.Approx.cmsTopK(docs, d = 3, w = 2048, k = 20)
-    }
-    // Shard plan: one shard-keyed exchange of slim rows; replication
-    // grows every shard uniformly (hash balance is the audit output).
-    time("shard_plan") {
-      graft.operators.Sampling.shardPlan(
-        docs.withColumn("n_chars", length(col("text")).cast("long")), nShards = 16)
-    }
-    // The fused modern pipeline: every gate inline on one scan.
-    time("corpus_prep2") {
-      val bench = docs.where(col("doc_id") % 20 === 0)
-        .select(col("doc_id"),
-          array_join(slice(split(col("text"), " "), 1, 40), " ").as("text"))
-      graft.pipeline.CorpusPrep.prepareModern(docs, bench, minTokens = 20,
-        maxDupFrac = 0.1, maxHitRatio = 0.2,
-        budgets = Seq("src0" -> 400L, "src1" -> 700L, "src2" -> 100000L),
-        defaultBudget = 250L)
-    }
-    // DSIR: the model aggregate stays <= buckets rows however large the
-    // corpus, and native scoring is a projection — both passes should
-    // scale like the scan, replication notwithstanding.
-    time("dsir") {
-      graft.operators.Sampling.dsirSelect(docs,
-        target = col("lang") === "en", buckets = 512, k = 150)
-    }
-    // Span corruption is a pure per-doc projection: replication moves
-    // only the scan, never a shuffle.
-    time("span_corrupt") {
-      TextAnalysis.spanCorrupt(docs)
-    }
-
-    // ---- sketch / graph family over a multiplied EVENTS stream ----
-    // Replicas get fresh event ids AND fresh user ids, so the distinct-
-    // value cardinality the sketches face grows linearly with factor —
-    // the honest stress for a distinct-count structure (duplicating ids
-    // would leave the sketch's workload constant).
-    val evs = {
-      val base = Tables.events(spark, sfDir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      (0 until factor).map { k =>
-        base.withColumn("event_id", col("event_id") + lit(k * 100000000L))
-          .withColumn("user_id", col("user_id") + lit(k * 1000000L))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet("/tmp/graft_stress_events")
-      spark.read.parquet("/tmp/graft_stress_events")
-    }
-    // HLL: per-group state is 512 registers regardless of factor; the
-    // distinct() certificate side is the only thing that grows.
-    time("hll_counts") {
-      graft.operators.Approx.hllAudit(evs, "event_type", "user_id")
-    }
-    // KMV: bottom-64 per group regardless of factor; the exact-overlap
-    // certificate join grows linearly.
-    time("kmv_overlap") {
-      graft.operators.Approx.kmvOverlap(evs, "event_type", "user_id")
-    }
-    // Decay score: per-user window stays <= 16 rows however many users.
-    time("decay_scores") {
-      graft.operators.Analytics.decayScores(evs,
-        "user_id", "ts", "event_id", "value")
-    }
-    time("sample_quantiles") {
-      graft.operators.Approx.sampleQuantileAudit(evs,
-        "event_type", "value", "event_id")
-    }
-
-    // PageRank over a multiplied trade graph: customers (and their
-    // orders) replicate with fresh ids while SUPPLIERS stay shared — the
-    // supplier hubs gain factor-times the degree, the adversarial skew
-    // case for the per-round aggregate (map-side combine must absorb it:
-    // the share vector stays N rows and broadcasts).
-    val (ordersX, lineitemX) = {
-      val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey")
-      val l = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_suppkey")
-      val om = (0 until factor).map { k =>
-        o.withColumn("o_orderkey", col("o_orderkey") + lit(k * 100000000L))
-          .withColumn("o_custkey", col("o_custkey") + lit(k * 10000000L))
-      }.reduce(_ unionByName _)
-      val lm = (0 until factor).map { k =>
-        l.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L))
-      }.reduce(_ unionByName _)
-      om.write.mode("overwrite").parquet("/tmp/graft_stress_orders")
-      lm.write.mode("overwrite").parquet("/tmp/graft_stress_lineitem")
-      (spark.read.parquet("/tmp/graft_stress_orders"),
-        spark.read.parquet("/tmp/graft_stress_lineitem"))
-    }
-    time("pagerank") {
-      graft.operators.Graph.pageRank(ordersX, lineitemX)
-    }
-    // Weighted variant under the same hub skew: supplier nodes gain both
-    // degree AND weight mass with factor.
-    time("pagerank_weighted") {
-      graft.operators.Graph.pageRankWeighted(ordersX, lineitemX)
-    }
-    // The bucketed-edge substrate (the registered plan): the one-off
-    // layout build scales with the edge list; the loop's per-round cost
-    // must stay rank-vector-bounded — edges scan in place, zero
-    // broadcasts, so the curve stays flat where the broadcast loop's
-    // per-round share broadcast grows with N.
-    // build-on-missing so a name filter selecting only the consumers
-    // (e.g. "bucketed") still finds the table — the build stays timed
-    // under its own entry when that entry is selected
-    def ensureStressEdges(): Unit =
-      if (!spark.catalog.tableExists("stress_gredges"))
-        graft.operators.Graph.writeTradeEdgeTable(ordersX, lineitemX,
-          "stress_gredges", "/tmp/graft_stress_gredges", buckets = cpus.toInt)
-    time("pagerank_bkt_build") {
-      ensureStressEdges()
-      spark.table("stress_gredges")
-    }
-    time("pagerank_bucketed") {
-      ensureStressEdges()
-      graft.operators.Graph.pageRankBucketed(spark, "stress_gredges")
-    }
-    time("bfs_bucketed") {
-      ensureStressEdges()
-      val cust = Tables.customer(spark, sfDir)
-        .select("c_custkey", "c_nationkey")
-      graft.operators.Graph.bfsLayersBucketed(spark, "stress_gredges",
-        "stress_bfs_visited", "/tmp/graft_stress_gredges",
-        buckets = cpus.toInt, cust, seedNationKey = 1, maxHops = 4)
-    }
-    // Label propagation over the multiplied co-supply projection: the
-    // lineitem replication multiplies ORDERS (fresh orderkeys, shared
-    // suppliers), so per-order pair counts stay C(order size, 2) and
-    // the edge list grows linearly while edge WEIGHTS concentrate on
-    // the same supplier pairs — the aggregate-skew case. Votes are
-    // (node, label) pre-aggregated, so the per-round exchange must stay
-    // node-bounded whatever the weight mass.
-    time("lpa_communities") {
-      graft.operators.Graph.labelPropagation(
-        graft.operators.Graph.coSupplyEdges(lineitemX), rounds = 4)
-    }
-    // Triangle census + k-core on the k-NN skeleton: the sparsifier
-    // bounds the skeleton at <= 2nk edges whatever the projection's
-    // density, so both statistics must stay node-bounded as the raw
-    // pair mass grows with factor (only the window over per-node edge
-    // lists sees the growth).
-    time("knn_triangles") {
-      graft.operators.Graph.triangleStats(
-        graft.operators.Graph.knnSparsify(
-          graft.operators.Graph.coSupplyEdges(lineitemX), 5))
-    }
-    time("kcore_peel") {
-      graft.operators.Graph.kCorePeel(
-        graft.operators.Graph.knnSparsify(
-          graft.operators.Graph.coSupplyEdges(lineitemX), 5),
-        k = 6, rounds = 8)
-    }
-    // The bucketed co-supply substrate (the REGISTERED plans since r11):
-    // the in-session loops above re-exchange the full edge list every BSP
-    // round (1x/round for LPA votes, 2x/round for the recount peel); the
-    // bucketed loops scan the persisted edges in place, so their curves
-    // must stay node-vector-bounded as the projection grows with factor.
-    def ensureStressCosup(): Unit = {
-      if (!spark.catalog.tableExists("stress_gcosup"))
-        graft.operators.Graph.writeCoSupplyEdgeTable(lineitemX,
-          "stress_gcosup", "/tmp/graft_stress_gcosup", buckets = cpus.toInt)
-      if (!spark.catalog.tableExists("stress_gskel"))
-        graft.operators.Graph.writeKnnSkeletonTable(spark, "stress_gcosup",
-          5, "stress_gskel", "/tmp/graft_stress_gcosup",
-          buckets = cpus.toInt)
-    }
-    time("cosup_bkt_build") {
-      ensureStressCosup()
-      spark.table("stress_gskel")
-    }
-    time("lpa_bucketed") {
-      ensureStressCosup()
-      graft.operators.Graph.labelPropagationBucketed(spark, "stress_gcosup",
-        rounds = 4)
-    }
-    time("kcore_bucketed") {
-      ensureStressCosup()
-      graft.operators.Graph.kCorePeelBucketed(spark, "stress_gskel",
-        k = 6, rounds = 8)
-    }
-    time("triangles_bucketed") {
-      ensureStressCosup()
-      graft.operators.Graph.triangleStatsOriented(
-        spark.table("stress_gskel").select(col("src"), col("dst"), col("w")),
-        byDegree = true)
-    }
-    // The incremental/decide family under GROWING BASE, FIXED DELTA —
-    // the production cadence's scale axis: the base graph replicates
-    // with factor while the arriving day (a fresh unreplicated slice
-    // with novel customer keys / order keys) stays constant-size. The
-    // decide costs must track the ROUND COUNT and the delta, not the
-    // base re-computation: warm PageRank pays 3 in-place rounds
-    // (vs 9+ from scratch), warm LPA 2 vote rounds, and the skeleton
-    // refresh only the touched-node buckets.
-    val deltaO = Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_custkey")
-      .withColumn("o_orderkey", col("o_orderkey") + lit((factor + 1) * 100000000L))
-      .withColumn("o_custkey", col("o_custkey") + lit((factor + 1) * 10000000L))
-    val deltaL = Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_suppkey")
-      .withColumn("l_orderkey", col("l_orderkey") + lit((factor + 1) * 100000000L))
-    def ensureStressVectors(): Unit = {
-      ensureStressEdges()
-      ensureStressCosup()
-      if (!spark.catalog.tableExists("stress_gprvec"))
-        graft.operators.Graph.writeRankVectorTable(spark, "stress_gredges",
-          "stress_gprvec", "/tmp/graft_stress_gredges", cpus.toInt)
-      if (!spark.catalog.tableExists("stress_glpavec"))
-        graft.operators.Graph.writeLabelVectorTable(spark, "stress_gcosup",
-          "stress_glpavec", "/tmp/graft_stress_gcosup", cpus.toInt)
-    }
-    time("vector_tables_build") {
-      ensureStressVectors()
-      spark.table("stress_gprvec")
-    }
-    time("pagerank_warm_decide") {
-      ensureStressVectors()
-      graft.operators.Graph.pageRankWarmBucketed(spark, "stress_gredges",
-        "stress_gprvec", deltaO, deltaL)
-    }
-    time("lpa_warm_decide") {
-      ensureStressVectors()
-      graft.operators.Graph.labelPropagationWarmBucketed(spark,
-        "stress_gcosup", "stress_glpavec",
-        graft.operators.Graph.coSupplyEdges(deltaL))
-    }
-    time("knn_incr_refresh") {
-      ensureStressVectors()
-      graft.operators.Graph.knnSkeletonIncremental(spark, "stress_gcosup",
-        "stress_gskel", graft.operators.Graph.coSupplyEdges(deltaL), 5)
-    }
-    // HLL rollup: register state is (groups x days x 512) regardless of
-    // events volume; the two corpus distincts are the only linear terms.
-    time("hll_rollup") {
-      graft.operators.Approx.hllRollupAudit(evs, "event_type", "ts", "user_id")
-    }
-    // CUPED: one per-user aggregate + 1-row pooled broadcast.
-    time("cuped") {
-      graft.operators.Analytics.cupedMetrics(evs, "user_id", "ts", "value",
-        "2024-01-16", arms = 2)
-    }
-    // Profiler: one aggregate pass, |cols|-way distinct expand.
-    time("profile") {
-      graft.validation.Profile.profile(evs)
-    }
-    // Bottom-k quantile sketch: state is min(k, n) rows per (group, day)
-    // WHATEVER the factor (output flat at groups x days x k), the build
-    // a two-phase rank — the curve should be scan-linear with no
-    // per-group sort blowup.
-    time("quantile_daily") {
-      graft.operators.Approx.quantileSketchDaily(evs, "event_type", "ts",
-        "event_id", "value")
-    }
-    // Rollup: min-k merge of bounded states + the direct sketch + the
-    // exact-rank audit (the audit's per-group sort is the disclosed
-    // linear-growth term; production runs the state merge alone).
-    time("quantile_rollup") {
-      graft.operators.Approx.quantileRollup(evs, "event_type", "ts",
-        "event_id", "value", "2024-01-08", "2024-01-22")
-    }
-    // Timeline: the as-of prefix merge is STATE-sized (groups x days^2
-    // x k) — corpus growth moves only the daily build scan.
-    time("quantile_timeline") {
-      graft.operators.Approx.quantileTimeline(evs, "event_type", "ts",
-        "event_id", "value")
-    }
-    // Day-merged SpaceSaving: the fold is stream-linear, the merge
-    // touches only m-counter summaries per (group, day). One hot item
-    // planted at share 1/50 (> the post-merge 2/128 threshold) so the
-    // guaranteed-set audit stays non-degenerate under replication.
-    time("ss_rollup") {
-      graft.operators.Approx.spaceSavingRollupAudit(
-        evs.select(col("event_type").as("g"),
-          col("ts").cast("date").cast("string").as("day"),
-          when(pmod(col("user_id"), lit(50)) === 0, 7L)
-            .otherwise(col("user_id")).as("i"),
-          unix_micros(col("ts").cast("timestamp")).as("o1"),
-          col("event_id").as("o2")), m = 128)
-    }
-    // Incremental join maintenance: five key joins, all linear.
-    time("incr_join") {
-      graft.operators.Etl.incrJoinRevenue(
-        ordersX.withColumn("o_orderpriority",
-          pmod(col("o_custkey"), lit(5)).cast("string")),
-        lineitemX.withColumnRenamed("l_suppkey", "l_extendedprice"))
-    }
-    // Topic labels on the replicated corpus: replication multiplies tf
-    // uniformly, so labels are invariant — the timing is the signal.
-    time("topic_labels") {
-      graft.operators.TextAnalysis.topicLabels(
-        docs.select(col("doc_id"), col("text")), nPlanes = 4, topK = 5,
-        stopwords = Seq("the", "a", "data", "value"))
-    }
-    // Hybrid retrieval: BM25 postings + one embedding pass + a
-    // broadcast-panel cosine — both channels corpus-linear, fusion
-    // bounded at 2k rows per query.
-    time("hybrid_search") {
-      graft.operators.TextAnalysis.hybridSearch(
-        docs.select(col("doc_id"), col("text")),
-        Seq(1L -> "spark window agg", 2L -> "customer join query",
-          3L -> "vector scan filter", 4L -> "stream batch merge"),
-        k = 10, k1 = 1.2, b = 0.75)
-    }
-    // Skew-split join: the planted hot key's row count grows linearly
-    // with factor — the hot branch must stay broadcast-bounded.
-    time("skew_join") {
-      graft.operators.Etl.skewSplitJoin(evs, "user_id", "value",
-        hotThreshold = 1000L)
-    }
-    // Compaction planning stays manifest-sized however big the rows get.
-    time("compaction_plan") {
-      graft.operators.Packing.compactionPlan(evs, "event_type", "ts",
-        targetRows = 5000L)
-    }
-    // Day-merged CMS: the daily state is d·w counters per day WHATEVER
-    // the factor, the merge state-sized — the curve is the token scan.
-    time("cms_rollup") {
-      graft.operators.Approx.cmsRollup(
-        evs.select(col("user_id").cast("string").as("token"),
-          to_date(col("ts")).as("day")), d = 3, w = 2048, k = 20)
-    }
-    // Poisson bootstrap: B draws per row collapse map-side, so only
-    // groups x B rows ever shuffle — the curve is the hash-heavy scan.
-    time("bootstrap_ci") {
-      graft.operators.Analytics.bootstrapCi(evs, "event_type", "event_id",
-        "value", b = 32)
-    }
-    // Point-in-time SCD2 read: fact growth moves the one union+window
-    // shuffle linearly; the dimension (and its same-day collapse) stays
-    // original-sized however many facts arrive.
-    time("scd2_asof") {
-      val o = Tables.orders(spark, sfDir)
-      val dim = graft.operators.Etl.scd2(o, key = "o_custkey",
-        attr = "o_orderstatus", ts = "o_orderdate", tie = "o_orderkey")
-      val l = Tables.lineitem(spark, sfDir)
-        .select("l_orderkey", "l_shipdate", "l_extendedprice", "l_discount")
-      val factsX = (0 until factor).map(_ => l).reduce(_ unionByName _)
-        .join(o.select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey"), to_date(col("l_shipdate")).as("ship_day"),
-          col("l_extendedprice"), col("l_discount"))
-      graft.operators.Etl.scd2PointInTime(factsX, dim, "o_custkey", "ship_day")
-        .groupBy(coalesce(col("status"), lit("none")).as("s"))
-        .agg(count(lit(1)).as("n"))
-    }
-    // Basket rules: replicated baskets multiply the pair-expansion input
-    // linearly (C(basket, 2) per basket is bounded by basket SIZE, which
-    // replication does not change); supports grow ×factor but the rule
-    // space stays the bounded brand-pair domain.
-    time("basket_rules") {
-      val li = Tables.lineitem(spark, sfDir)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val liX = (0 until factor).map(k =>
-        li.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.basketRules(
-        liX.join(Tables.part(spark, sfDir)
-          .select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("basket"), col("p_brand").as("item")),
-        minSupportBp = 20)
-    }
-    // Harmonic centrality: offsetting BOTH keys makes factor disconnected
-    // graph replicas — the (seed, node) BFS state and per-round joins
-    // grow linearly while the 4-seed panel (smallest ids, copy 0) only
-    // ever reaches its own replica.
-    time("harmonic") {
-      val li = Tables.lineitem(spark, sfDir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val liX = (0 until factor).map(k =>
-        li.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L))
-          .withColumn("l_suppkey", col("l_suppkey") + lit(k * 10000000L)))
-        .reduce(_ unionByName _)
-      val edges = graft.operators.Graph.coSupplyEdges(liX)
-      val seeds = edges.select(col("src").as("seed")).distinct()
-        .orderBy(col("seed")).limit(4)
-      graft.operators.Graph.harmonicCentrality(edges, seeds, maxHops = 4)
-    }
-    // Gini: the per-entity frame grows ×factor, the rank window stays
-    // partitioned per nation — the curve is the entity aggregate + the
-    // partitioned sort, never a global one.
-    time("gini") {
-      val c = Tables.customer(spark, sfDir)
-        .select(col("c_custkey"), col("c_nationkey"))
-      val cX = (0 until factor).map(k =>
-        c.withColumn("c_custkey", col("c_custkey") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      val o = Tables.orders(spark, sfDir)
-        .select(col("o_custkey"), (col("o_totalprice").cast("decimal(18,2)")
-          * 100).cast("long").as("c0"))
-      val oX = (0 until factor).map(k =>
-        o.withColumn("o_custkey", col("o_custkey") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.concentrationProfile(
-        cX.join(oX, col("c_custkey") === col("o_custkey"), "left")
-          .groupBy(col("c_nationkey").as("g"), col("c_custkey").as("entity"))
-          .agg(coalesce(sum(col("c0")), lit(0L)).as("cents")))
-    }
-    // Classifier AUC: the corpus scan grows ×factor, the score histogram
-    // and the rank-sum frame stay bounded by distinct quantized scores.
-    time("nb_auc") {
-      val m5 = col("doc_id") % 5
-      val planted = docs.withColumn("text",
-        when(m5 === 1 || m5 === 2,
-          concat(col("text"), lit(" zz9 qq8 xx7 kk6 vv5")))
-          .otherwise(col("text")))
-      val scored = TextAnalysis.nbScored(planted,
-        posSeed = col("doc_id") % 5 === 0,
-        negSeed = col("doc_id") % 5 === 1, vocabSize = 500)
-        .where(col("doc_id") % 5 >= 2)
-        .select(expr("sum_u * 1000 DIV n_tokens").as("score"),
-          (col("doc_id") % 5 =!= 2).as("label"))
-      graft.operators.Analytics.rocAuc(scored)
-    }
-    // HyperANF: offsetting BOTH keys makes factor disconnected co-supply
-    // replicas — the O(16·V) per-node register file and each round's
-    // edge join grow linearly while the round count stays 4; the
-    // curve's question is whether the register state (the heaviest
-    // per-node state in the graph family) stays scan-bound.
-    time("hyperanf") {
-      val li = Tables.lineitem(spark, sfDir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val liX = (0 until factor).map(k =>
-        li.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L))
-          .withColumn("l_suppkey", col("l_suppkey") + lit(k * 10000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Graph.hyperAnf(
-        graft.operators.Graph.coSupplyEdges(liX)
-          .select(col("src"), col("dst")), maxT = 4)
-    }
-    // Widest paths: same disconnected replicas; the O(k·V) capacity
-    // state stays confined to copy 0's replica (the 4-seed panel never
-    // reaches the others), so the curve isolates the per-round
-    // full-edge-scan join cost — the part that grows with the graph.
-    time("widest") {
-      val li = Tables.lineitem(spark, sfDir)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val liX = (0 until factor).map(k =>
-        li.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L))
-          .withColumn("l_suppkey", col("l_suppkey") + lit(k * 10000000L)))
-        .reduce(_ unionByName _)
-      val edges = graft.operators.Graph.coSupplyEdges(liX)
-      val seeds = edges.select(col("src").as("seed")).distinct()
-        .orderBy(col("seed")).limit(4)
-      graft.operators.Graph.widestPaths(edges, seeds, rounds = 6, topK = 5)
-    }
-    // PCA: the multiplied embeddings grow every row-dot pass ×factor;
-    // the iterate itself is ONE dim-length quantized vector regardless
-    // of rows (collected driver-side by dim, not by corpus) — the curve
-    // should track the six corpus scans linearly.
-    time("pca") {
-      Similarity.pcaPower(embs, dim = 64, iters = 6)
-    }
-    // DP vocab release: the token scan and the distinct-doc frequency
-    // aggregate grow ×factor; the released set stays bounded by the
-    // true vocabulary head (replication pushes more items past τ but
-    // never past |vocab|) — the unbounded-domain mechanism's state is
-    // the per-item count frame, bounded by distinct items.
-    time("dp_vocab") {
-      graft.validation.Privacy.dpStabilityRelease(
-        docs, "doc_id", "text", tau = 12L)
-    }
-    // Length-bucketed packing plan: the token scan and every per-
-    // (class, shard) window grow linearly; sharding keeps window
-    // partitions at |docs|/(classes·shards) so no reducer sees the
-    // whole corpus — the property this curve exists to check.
-    time("pack_plan") {
-      graft.operators.Packing.packPlanBucketed(
-        docs.select(col("doc_id"), col("text")), maxTokens = 256L,
-        shards = 4)
-    }
-    // HLL set ops: register files stay groups x 512 at every factor;
-    // replication grows only the one distinct the exact-certification
-    // side scans (replicas collapse to the same distinct set, so the
-    // curve isolates the scan).
-    time("hll_overlap") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("user_id"))
-      val evX = (0 until factor).map(_ => ev).reduce(_ unionByName _)
-      graft.operators.Approx.hllOverlap(evX, "event_type", "user_id")
-    }
-    // Survival pair: the per-user aggregate (the only data-sized
-    // shuffle) grows with offset user ids; the duration grid and both
-    // read paths stay day-span bounded.
-    time("kaplan_meier") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.kaplanMeier(evX, "user_id", "ts",
-        "purchase")
-    }
-    // Top-r PCA with deflation: r=2 doubles the per-iteration scans
-    // of pca plus ONE deflation pass (the localCheckpointed deflated
-    // frame keeps component 2 from recomputing component 1) — the
-    // curve should sit near 2× the single-component pca entry and
-    // stay scan-linear in the corpus.
-    time("pca_topr") {
-      Similarity.pcaTopR(embs, dim = 64, iters = 6, r = 2)
-    }
-    // Whitening transform: derivation = the pca_topr scans; the
-    // transform itself is ONE corpus scan against plan-literal
-    // loading vectors (no shuffle, no state) — linear by shape.
-    time("whiten") {
-      Similarity.pcaWhiten(embs, dim = 64, iters = 6, r = 2)
-    }
-    // Log-rank pair: like kaplan_meier the per-user aggregate is the
-    // only data-sized shuffle; the hypergeometric terms run on the
-    // day-span-bounded grid (stratified: × |event types| strata), so
-    // both tests should track the aggregate linearly.
-    time("logrank") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.logRankTest(evX, "user_id", "ts",
-        "purchase")
-    }
-    time("logrank_strat") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.logRankStratified(evX, "user_id", "ts",
-        "purchase")
-    }
-    // Cox score at fixed hr: identical shape to logrank_strat (same
-    // stratum grid, different bounded-grid terms).
-    time("cox_score") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.coxScore(evX, "user_id", "ts",
-        "purchase")
-    }
-    // Backfill planner: per-copy type names grow the spine like
-    // part_complete; the plan output is bounded by the missing-day
-    // count (×factor types, same day span).
-    time("backfill_plan") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      val h = conv(substring(md5(concat(lit("gap:"), col("event_type"),
-        lit("|"), col("ts").cast("date").cast("string"))), 1, 13), 16, 10)
-        .cast("long")
-      graft.operators.Etl.backfillPlan(
-        evX.where(pmod(h, lit(7)) =!= 0), "event_type", "ts",
-        batchDays = 7)
-    }
-    // Streaming sketch/state rows under ×factor staged bytes: the
-    // micro-batch machinery is a fixed cost, so the curve isolates
-    // the per-row fold work — HLL registers stay groups×512 whatever
-    // the factor; SpaceSaving counters stay m per group; attribution
-    // state stays one record per user. Offsets keep users distinct so
-    // state cardinality scales with the corpus (the honest case).
-    time("stream_spacesaving") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L))
-          .withColumn("event_id", col("event_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_sssrc"
-      graft.streaming.EventStream.stageTwoPhase(evX,
-        col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), base)
-      val stream = spark.readStream.schema(evX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.heavyHittersStream(stream, m = 64))
-    }
-    time("stream_attribution") {
-      val ev = Tables.events(spark, sfDir)
-        .where(col("event_type").isin("purchase", "click", "view"))
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L))
-          .withColumn("event_id", col("event_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_attrsrc"
-      graft.streaming.EventStream.stageTwoPhase(evX,
-        col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), base)
-      val stream = spark.readStream.schema(evX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.lastTouchStream(stream,
-          purchaseType = "purchase", touchTypes = Set("click", "view"),
-          windowUs = 86400000000L))
-    }
-    time("stream_hll") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("user_id"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_hllsrc"
-      graft.streaming.EventStream.stageTwoPhase(evX,
-        col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), base)
-      val stream = spark.readStream.schema(evX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.hllRegisterStream(stream, "user_id"),
-        outputMode = "complete")
-    }
-    // Cox baseline: same shape as the log-rank/cox_score entries —
-    // per-user aggregate linear, term blocks day-span bounded.
-    time("cox_baseline") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.coxBaseline(evX, "user_id", "ts",
-        "purchase")
-    }
-    // Bitext mining: replicas multiply both slices; candidates stay
-    // bucket-blocked so the pair work grows ~quadratically ONLY
-    // within buckets (the declared mining trade-off), rank windows
-    // stay bucket-occupancy bounded.
-    time("bitext_mine") {
-      val d = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"), col("lang"))
-      val dX = (0 until factor).map(k =>
-        d.withColumn("doc_id", col("doc_id") + lit(k * 10000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.TextAnalysis.bitextMine(dX, "lang", "en", "fr",
-        dim = 64, nPlanes = 4)
-    }
-    // Robust trend + decomposition: the daily aggregate is the only
-    // data-sized work; per-copy TYPE names also grow the bounded
-    // panel ×factor so the C(days,2) pair frame is stressed per type.
-    time("mann_kendall") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.mannKendallTrend(evX, "event_type", "ts")
-    }
-    time("stl_decompose") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.stlDecompose(evX, "event_type", "ts")
-    }
-    time("forecast_backtest") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.forecastBacktest(evX, "event_type", "ts")
-    }
-    // Epoch plan: corpus scan collapses to |sources| totals; per-copy
-    // SOURCE names grow the grant frame ×factor.
-    time("epoch_plan") {
-      val d = Tables.documents(spark, sfDir)
-        .select(concat(col("source"), lit("_")).as("source"), col("text"))
-      val dX = (0 until factor).map(k =>
-        d.withColumn("source", concat(col("source"), lit(k.toString))))
-        .reduce(_ unionByName _)
-      graft.operators.Sampling.epochPlan(
-        dX.select(col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens")),
-        "source", "n_tokens",
-        priority = pmod(length(col("source")), lit(3)) + lit(1),
-        budgetBp = 33700L, maxEpochs = 5)
-    }
-    // t-closeness: the (class, value) count frame is the only
-    // data-sized aggregate; replicated customers keep the same class
-    // structure so the curve isolates the scan.
-    time("tcloseness") {
-      val c = Tables.customer(spark, sfDir)
-      val cX = (0 until factor).map(_ => c).reduce(_ unionByName _)
-      graft.validation.Privacy.tClosenessAudit(cX,
-        Seq("c_nationkey", "c_mktsegment"),
-        floor(col("c_acctbal") / 1000.0).cast("long"), tMicro = 250000L)
-    }
-    time("benford") {
-      val o = Tables.orders(spark, sfDir).select(col("o_totalprice"))
-      val oX = (0 until factor).map(_ => o).reduce(_ unionByName _)
-      graft.operators.Analytics.benfordAudit(oX, "o_totalprice")
-    }
-    time("benford_timeline") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"), col("value"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.benfordTimeline(evX, "event_type",
-        "ts", "value")
-    }
-    // Cox profile: 4 ladder rungs on the bounded grid — the corpus
-    // cost is the one per-user aggregate, shared across rungs.
-    time("cox_profile") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      graft.operators.Analytics.coxScoreProfile(evX, "user_id", "ts",
-        "purchase")
-    }
-    // Streaming KMV under ×factor staged bytes: offset users keep
-    // distinct values scaling; state stays k hashes per group.
-    time("stream_kmv") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("user_id"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_kmvsrc"
-      graft.streaming.EventStream.stageTwoPhase(evX,
-        col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), base)
-      val stream = spark.readStream.schema(evX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      val rows = stream.select(col("event_type").as("g"),
-        graft.operators.Approx.kmvHash(col("user_id")).as("hc"))
-      graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.kmvRegisterStream(rows, k = 128))
-    }
-    // Streaming decay / sampler under ×factor staged bytes — fixed
-    // commit machinery, bounded per-user / per-source state.
-    time("stream_decay") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("user_id", col("user_id") + lit(k * 100000000L))
-          .withColumn("event_id", col("event_id") + lit(k * 100000000L)))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_decaysrc"
-      graft.streaming.EventStream.stageTwoPhase(evX,
-        col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), base)
-      val stream = spark.readStream.schema(evX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.decayScoreStream(stream, n = 16))
-    }
-    time("stream_gsample") {
-      val d = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("source"))
-      val dX = (0 until factor).map(k =>
-        d.withColumn("doc_id", col("doc_id") + lit(k * 10000000L)))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_gsamplesrc"
-      graft.streaming.EventStream.stageTwoPhase(dX,
-        pmod(col("doc_id"), lit(2L)) === 0L, base)
-      val stream = spark.readStream.schema(dX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.groupSampleStream(stream, k = 5))
-    }
-    // Partition completeness: per-copy type names grow the calendar
-    // spine (|types| × |days|) ×factor along with the scan, so the
-    // audit's "bounded" cross is itself stress-tested, not just the
-    // distinct pre-aggregate.
-    time("part_complete") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      val h = conv(substring(md5(concat(lit("gap:"), col("event_type"),
-        lit("|"), col("ts").cast("date").cast("string"))), 1, 13), 16, 10)
-        .cast("long")
-      graft.operators.Etl.partitionCompleteness(
-        evX.where(pmod(h, lit(7)) =!= 0), "event_type", "ts")
-    }
-
-    // ---- round-16 second-continuation additions: the time-series /
-    // statistics batch. Type-multiplied events grow the GROUP axis
-    // ×factor (more bounded panels, same per-panel size — the
-    // mann_kendall convention); row-multiplied evs grow the corpus the
-    // one data-sized aggregate must chew.
-    def typeX: DataFrame = {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"), col("user_id"), col("value"))
-      (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-    }
-    time("theil_sen_forecast") {
-      graft.operators.Analytics.theilSenForecast(typeX, "event_type", "ts")
-    }
-    time("spearman_daily") {
-      graft.operators.Analytics.spearmanDaily(typeX, "event_type", "ts",
-        "value")
-    }
-    time("kendall_tau") {
-      graft.operators.Analytics.kendallTauDaily(typeX, "event_type", "ts",
-        "value")
-    }
-    time("runs_test") {
-      graft.operators.Analytics.runsTestDaily(typeX, "event_type", "ts")
-    }
-    time("autocorr") {
-      graft.operators.Analytics.autocorrDaily(typeX, "event_type", "ts")
-    }
-    time("seasonal_strength") {
-      graft.operators.Analytics.seasonalStrength(typeX, "event_type", "ts")
-    }
-    time("poisson_rate") {
-      graft.operators.Analytics.poissonRateTest(typeX, "event_type", "ts",
-        "2024-01-08", "2024-01-15", "2024-01-22")
-    }
-    time("capture_recapture") {
-      graft.operators.Analytics.captureRecapture(typeX, "event_type",
-        "user_id", "ts", "2024-01-08", "2024-01-15", "2024-01-22")
-    }
-    time("fano") {
-      graft.operators.Analytics.fanoDaily(typeX, "event_type", "ts")
-    }
-    // L-moments face the row-multiplied corpus: the histogram is
-    // value-bounded, so only the one corpus aggregate grows.
-    time("lmoments") {
-      graft.operators.Analytics.lmomentsValues(evs, "event_type", "value")
-    }
-    // AD test ditto — same scoreHistCum shape as ks/mann-whitney.
-    time("ad_test") {
-      import org.apache.spark.sql.graftnative.RollingHash.rollingHash
-      graft.operators.Analytics.adTest(evs
-        .where(col("user_id").isNotNull && col("value").isNotNull)
-        .select((pmod(rollingHash(concat(lit("ab:"),
-          col("user_id").cast("string"))), lit(2)) === 1).as("label"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long")
-            .as("score")))
-    }
-    // Markov stationary: the lead window faces the row-multiplied
-    // corpus; the matrix stays |types|² however large the scan.
-    time("markov_stationary") {
-      graft.operators.Observability.markovStationary(evs, "user_id",
-        "ts", "event_id", "event_type", iters = 12)
-    }
-    // Heaps curve: the token first-seen aggregate faces the ×factor
-    // doc corpus (replica tokens collapse onto the same types — the
-    // saturation worst case: huge mass, near-zero new types).
-    time("heaps_curve") {
-      graft.operators.TextAnalysis.heapsCurve(docs, buckets = 10)
-    }
-    // Power/sequential/cadence rows face the row-multiplied corpus
-    // with FRESH user ids (the distinct-cardinality honest stress);
-    // outputs stay groups/looks bounded at every factor.
-    time("power_mde") {
-      graft.operators.Analytics.powerMde(evs, "event_type", "user_id")
-    }
-    time("sequential_ab") {
-      graft.operators.Analytics.sequentialAb(evs, "user_id", "ts",
-        "event_type")
-    }
-    time("interarrival") {
-      graft.operators.Analytics.interarrivalPercentiles(evs,
-        "event_type", "ts", "event_id")
-    }
-    // Growth metrics on the fresh-user row-multiplied corpus: the
-    // per-(user, day) frame grows ×factor and so does the user-keyed
-    // first-day join / 7× fan-out it feeds.
-    time("new_vs_returning") {
-      graft.operators.Analytics.newVsReturning(evs, "user_id", "ts")
-    }
-    time("stickiness") {
-      graft.operators.Analytics.stickiness(evs, "user_id", "ts")
-    }
-    // PII screen: pure regex projection over the ×factor doc corpus.
-    time("pii_scan") {
-      graft.operators.TextAnalysis.piiScan(docs)
-    }
-    // Streaming Benford under ×factor staged bytes: cell state stays
-    // types × days × 9 however much mass the two commits carry.
-    time("stream_benford") {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), col("ts"), col("value"))
-      val evX = (0 until factor).map(k =>
-        ev.withColumn("event_type",
-          concat(col("event_type"), lit("_" + k))))
-        .reduce(_ unionByName _)
-      val base = "/tmp/graft_stress_benfsrc"
-      graft.streaming.EventStream.stageTwoPhase(evX,
-        col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"), base)
-      val stream = spark.readStream.schema(evX.schema)
-        .option("maxFilesPerTrigger", 1).parquet(base)
-      val cells = graft.streaming.EventStream.drainAvailableNow(
-        graft.streaming.EventStream.benfordCellStream(stream,
-          "event_type", "ts", "value"),
-        outputMode = "complete")
-      graft.operators.Analytics.benfordTimelineFromCells(
-        cells.localCheckpoint())
-    }
+    println(s"${names.size} queries, $failed failed")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone single-query timer: `graft.TimeOne <sfDir> <query> [iters]`.
   * Same session config and noop-sink materialization as [[Bench]] (so a
   * minimum here is comparable to a BASELINE floor), without paying a
@@ -12,16 +10,7 @@ object TimeOne {
     require(args.length >= 2, "usage: TimeOne <sfDir> <query> [iters]")
     val sfDir = args(0); val name = args(1)
     val iters = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // same JVM/codegen warm-up as Bench
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }

@@ -32,28 +32,6 @@ object Etl {
   def round2Stable(c: Column): Column =
     floor(c * 100 + 0.5).cast("double") / 100
 
-  /** Daily-partition extract: projected scan filtered to one partition day.
-    * Reference: etl/resources/rdb.py:78 (`WHERE DATE(col) = :partition_date`)
-    * + etl/common/assets/extract.py query templates. Both the date filter and
-    * the projection reach the parquet scan (PushedFilters / ReadSchema), so at
-    * 100 TB this prunes to a single date partition.
-    */
-  def extractDaily(src: DataFrame, dateCol: Column, day: String, cols: Seq[String]): DataFrame =
-    src.where(to_date(dateCol) === lit(day)).select(cols.map(col): _*)
-
-  /** Daily extract over a raw int64-nanos timestamp column: the day is
-    * rewritten to a [start, end) range on the stored long, which reaches the
-    * parquet scan as a pushed filter + row-group stats prune. `to_date` on a
-    * computed timestamp cannot push down; this form is what a 100 TB
-    * time-partitioned scan needs.
-    */
-  def extractDailyNs(src: DataFrame, tsNsCol: String, day: String, cols: Seq[String]): DataFrame = {
-    val startNs = java.time.LocalDate.parse(day).toEpochDay * 86400L * 1000000000L
-    val endNs = startNs + 86400L * 1000000000L
-    src.where(col(tsNsCol) >= startNs && col(tsNsCol) < endNs)
-      .select(cols.map(col): _*)
-  }
-
   /** Slowly-changing-dimension type 2 build: compact an ordered change log
     * into validity intervals. Rows where the tracked attribute differs from
     * its predecessor (per key, ordered by ts with an id tie-break) open a
@@ -246,12 +224,18 @@ object Etl {
     target.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(updates)
 
-  /** apply_schema: cast columns to a target schema, preserving order.
-    * Reference: etl/utils/parquet.py:145. `types` maps column -> Spark DDL
-    * type string; unmapped columns pass through.
+  /** apply_schema: cast columns to a target schema, preserving the
+    * frame's column order. Reference: etl/utils/parquet.py:145. `types`
+    * maps column -> Spark DDL type string; unmapped columns pass through,
+    * and a mapped column the frame lacks is an error.
     */
-  def applySchema(df: DataFrame, types: Seq[(String, String)]): DataFrame =
-    df.select(types.map { case (c, t) => col(c).cast(t).as(c) }: _*)
+  def applySchema(df: DataFrame, types: Seq[(String, String)]): DataFrame = {
+    val target = types.toMap
+    val missing = target.keySet -- df.columns
+    require(missing.isEmpty, s"applySchema: no column ${missing.mkString(", ")}")
+    df.select(df.columns.toSeq.map(c =>
+      target.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+  }
 
   /** Schema drift report between two frames (added/removed/type-changed).
     * Reference: etl/utils/parquet.py:110 (detect_schema_drift).

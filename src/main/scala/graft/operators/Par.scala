@@ -51,11 +51,6 @@ private[graft] object Par {
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
 
-  def run3[A, B, C](a: () => A, b: () => B, c: () => C): (A, B, C) = {
-    val r = runAll(Seq(a, b, c))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
-  }
-
   def run4[A, B, C, D](a: () => A, b: () => B, c: () => C,
       d: () => D): (A, B, C, D) = {
     val r = runAll(Seq(a, b, c, d))

@@ -57,11 +57,12 @@ class EtlSpec extends SparkSpec {
   }
 
   test("applySchema casts and preserves column order") {
-    val df = Seq(("1", "2.5")).toDF("a", "b")
-    val out = Etl.applySchema(df, Seq("a" -> "long", "b" -> "double"))
+    val df = Seq(("1", "x", "2.5")).toDF("a", "keep", "b")
+    val out = Etl.applySchema(df, Seq("b" -> "double", "a" -> "long"))
     assert(out.schema.map(f => (f.name, f.dataType.simpleString)) ==
-      Seq(("a", "bigint"), ("b", "double")))
-    assert(out.head() == Row(1L, 2.5))
+      Seq(("a", "bigint"), ("keep", "string"), ("b", "double")))
+    assert(out.head() == Row(1L, "x", 2.5))
+    intercept[IllegalArgumentException](Etl.applySchema(df, Seq("c" -> "int")))
   }
 
   test("schemaDrift reports added/removed/type changes") {

@@ -37,6 +37,41 @@ class ValidatorSpec extends SparkSpec {
     assert(r.getAs[Long]("unique_k") == 0)
   }
 
+  test("checkType: a match passes, a mismatch and a missing column fail") {
+    val df = Seq((1L, "a")).toDF("id", "name")
+    val r = Validator(df)
+      .checkType("id", "bigint")
+      .checkType("name", "int")
+      .checkType("absent", "string")
+      .report().head()
+    assert(r.getAs[Long]("type_id") == 0)
+    assert(r.getAs[Long]("type_name") == 1)
+    assert(r.getAs[Long]("type_absent") == 1)
+  }
+
+  test("checkRowCount: inside, below and above the bounds, and an empty frame") {
+    def rowCount(n: Int, lo: Option[Long], hi: Option[Long]): (Long, Long) = {
+      val r = Validator((1 to n).toDF("k"))
+        .checkRowCount(minCount = lo, maxCount = hi).report().head()
+      (r.getAs[Long]("total_rows"), r.getAs[Long]("row_count"))
+    }
+    assert(rowCount(3, Some(2L), Some(4L)) == ((3L, 0L)))
+    assert(rowCount(3, Some(3L), Some(3L)) == ((3L, 0L)))
+    assert(rowCount(1, Some(2L), Some(4L)) == ((1L, 1L)))
+    assert(rowCount(5, Some(2L), Some(4L)) == ((5L, 1L)))
+    assert(rowCount(5, None, Some(4L)) == ((5L, 1L)))
+    assert(rowCount(1, Some(2L), None) == ((1L, 1L)))
+    assert(rowCount(0, Some(1L), None) == ((0L, 1L)))
+    assert(rowCount(0, None, Some(4L)) == ((0L, 0L)))
+  }
+
+  test("checkCustom: a predicate that is null on some rows counts only true rows") {
+    val df = Seq(Some(5), None, Some(-1), None, Some(-7)).toDF("v")
+    val r = Validator(df).checkCustom("negative", col("v") < 0).report().head()
+    assert(r.getAs[Long]("total_rows") == 5)
+    assert(r.getAs[Long]("custom_negative") == 2)
+  }
+
   test("validateSchema reports ok / type_mismatch / missing / extra") {
     val df = Seq((1L, "a", 0.5)).toDF("id", "name", "score")
     val rep = SchemaCheck.validateSchema(df, Seq(
