@@ -74,6 +74,23 @@ object Stress {
     }
   }
 
+  /** Deletes the replica `dir` and every `graft_*_<tag>` entry under
+    * `tmp` built for it (substrate tables, staged layouts), where `<tag>`
+    * is the replica's [[SparkEntry.dirTag]]. Nothing reads them again:
+    * the catalog is in-memory and [[replicate]] overwrites. */
+  def cleanUp(dir: String, tmp: String = "/tmp"): Unit = {
+    val tag = SparkEntry.dirTag(dir)
+    val built = Option(new java.io.File(tmp).listFiles).toSeq.flatten
+      .filter(f => f.getName.startsWith("graft_") && f.getName.endsWith(s"_$tag"))
+    (new java.io.File(dir) +: built).map(_.toPath)
+      .filter(java.nio.file.Files.exists(_)).foreach { p =>
+        val walk = java.nio.file.Files.walk(p)
+        try walk.sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.deleteIfExists(f))
+        finally walk.close()
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: Stress <sfDir> <factor> [name-substring...]")
@@ -83,34 +100,38 @@ object Stress {
     val only = args.drop(2).toSeq
     val spark = Session.local()
     val dir = s"/tmp/graft_stress_${SparkEntry.dirTag(sfDir)}_x$factor"
-    replicate(spark, sfDir, dir, factor)
-    println(s"$sfDir x$factor -> $dir: " + Tables.names.map(n =>
-      s"$n=${Tables.table(spark, dir, n).count()}").mkString(" "))
-    val t0 = System.nanoTime()
-    SparkEntry.prebuildSubstrates(spark, dir)
-    println(f"${"prebuild_substrates"}%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+    try {
+      replicate(spark, sfDir, dir, factor)
+      println(s"$sfDir x$factor -> $dir: " + Tables.names.map(n =>
+        s"$n=${Tables.table(spark, dir, n).count()}").mkString(" "))
+      val t0 = System.nanoTime()
+      SparkEntry.prebuildSubstrates(spark, dir)
+      println(f"${"prebuild_substrates"}%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.exists(n.contains))
-    var failed = 0
-    names.foreach { name =>
-      maxFactor.get(name).filter(factor > _) match {
-        case Some(max) =>
-          println(f"$name%-32s  skipped (O(factor^2) pair output past x$max)")
-        case None =>
-          try {
-            val q0 = System.nanoTime()
-            val out = SparkEntry.queries(name)(spark, dir)
-            out.write.format("noop").mode("overwrite").save()
-            val t = (System.nanoTime() - q0) / 1e9
-            println(f"$name%-32s $t%8.2f s  (${out.count()} rows)")
-          } catch { case e: Throwable =>
-            failed += 1
-            println(s"$name FAILED: $e")
-          }
+      val names = SparkEntry.queries.keys.toSeq.sorted
+        .filter(n => only.isEmpty || only.exists(n.contains))
+      var failed = 0
+      names.foreach { name =>
+        maxFactor.get(name).filter(factor > _) match {
+          case Some(max) =>
+            println(f"$name%-32s  skipped (O(factor^2) pair output past x$max)")
+          case None =>
+            try {
+              val q0 = System.nanoTime()
+              val out = SparkEntry.queries(name)(spark, dir)
+              out.write.format("noop").mode("overwrite").save()
+              val t = (System.nanoTime() - q0) / 1e9
+              println(f"$name%-32s $t%8.2f s  (${out.count()} rows)")
+            } catch { case e: Throwable =>
+              failed += 1
+              println(s"$name FAILED: $e")
+            }
+        }
       }
+      println(s"${names.size} queries, $failed failed")
+    } finally {
+      spark.stop()
+      cleanUp(dir)
     }
-    println(s"${names.size} queries, $failed failed")
-    spark.stop()
   }
 }

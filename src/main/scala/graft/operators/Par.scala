@@ -12,10 +12,13 @@ package graft.operators
   * same frames, the same rows, the same per-chain round order — only the
   * driver-side submission overlaps, so outputs stay byte-identical.
   *
-  * Failure contract: the first thunk failure propagates its ORIGINAL
-  * exception (unwrapped from ExecutionException) after every thunk has
-  * settled, so a caller's try/catch sees exactly what the sequential
-  * code would have thrown.
+  * Failure contract: each thunk's Spark jobs run under the thunk's own
+  * job tag. The first thunk to fail (in time) cancels the other thunks'
+  * tags, thunks still queued do not start, and the caller waits until
+  * every thunk has settled before that first failure is rethrown as its
+  * ORIGINAL exception (unwrapped from ExecutionException) — so no job a
+  * sibling submitted outlives the call, and a caller's try/catch sees
+  * what the sequential code would have thrown.
   */
 private[graft] object Par {
   /** Driver-side overlap only needs enough threads to fill a job's tail
@@ -26,24 +29,49 @@ private[graft] object Par {
     * per-thunk order, bounded driver threads. */
   private val MaxPool = 8
 
+  private val runIds = new java.util.concurrent.atomic.AtomicLong
+
   private def runAll(thunks: Seq[() => Any]): IndexedSeq[Any] = {
     if (thunks.sizeIs <= 1) return thunks.map(_()).toIndexedSeq
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val run = runIds.incrementAndGet()
+    val tags = thunks.indices.map(i => s"graft-par-$run-$i")
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def cancelOthers(): Unit =
+      sc.foreach(c => tags.foreach(t => c.cancelJobsWithTag(t)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(thunks.size, MaxPool))
     try {
-      val futs = thunks.map { t =>
+      val futs = thunks.zip(tags).map { case (t, tag) =>
         pool.submit(new java.util.concurrent.Callable[Any] {
-          override def call(): Any = t()
+          override def call(): Any = {
+            if (first.get != null)
+              throw new java.util.concurrent.CancellationException(
+                s"$tag not started: a sibling thunk failed")
+            sc.foreach(_.addJobTag(tag))
+            try t()
+            catch { case e: Throwable =>
+              if (first.compareAndSet(null, e)) cancelOthers()
+              throw e
+            } finally sc.foreach(_.removeJobTag(tag))
+          }
         })
       }.toIndexedSeq
-      futs.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
+      // settle every thunk; after a failure, keep cancelling so a job a
+      // sibling submits after the first cancel cannot run to completion
+      futs.foreach { f =>
+        while (!f.isDone) {
+          if (first.get != null) cancelOthers()
+          try f.get(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+          catch { case _: java.util.concurrent.TimeoutException |
+                       _: java.util.concurrent.ExecutionException => }
         }
       }
-    } finally pool.shutdownNow()
+      Option(first.get).foreach(e => throw e)
+      futs.map(_.get())
+    } finally pool.shutdown()
   }
 
   def run2[A, B](a: () => A, b: () => B): (A, B) = {

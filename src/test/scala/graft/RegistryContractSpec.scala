@@ -5,25 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The coverage contract, enforced mechanically: every registered query
   * has a SURVEY §2 row (the judge diffs the inventory line by line —
   * r8 found three registry queries with no row), every §2 `q_*` row
-  * names a real registry entry, and every query either has a DuckDB
-  * oracle or is on the documented rows-only-by-design list (each of
-  * which must have a hash-exact portable twin registered).
+  * names a real registry entry, and every rows-only record's twin is a
+  * registered query with a DuckDB oracle. That each query has an oracle
+  * or a twin, and that names are unique, the registry's record type and
+  * its index enforce.
   *
   * Pure text/metadata checks — no SparkSession, runs in milliseconds.
   */
 class RegistryContractSpec extends AnyFunSuite {
-
-  /** Registered queries that intentionally have NO oracle: their bucket
-    * keys use Spark-internal hashes (xxhash64/FNV) that DuckDB cannot
-    * replay. Each is witnessed by a hash-exact portable twin. Growing
-    * this list requires a twin and a SURVEY note — the assertion below
-    * makes that a conscious edit, not an omission.
-    */
-  private val rowsOnlyByDesign = Map(
-    "q_dedup_minhash" -> "q_dedup_minhash_portable",
-    "q_dedup_simhash" -> "q_dedup_simhash_portable",
-    "q_dedup_staged" -> "q_dedup_minhash_portable", // staged ordering of the same internal-hash chain
-    "q_cdc_dedup" -> "q_cdc_dedup_portable")
 
   private lazy val surveyRows: Set[String] = {
     val f = Seq("SURVEY.md", "../SURVEY.md").map(new java.io.File(_))
@@ -49,23 +38,28 @@ class RegistryContractSpec extends AnyFunSuite {
   }
 
   test("every query has an oracle or a documented rows-only twin") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val undocumented = noOracle -- rowsOnlyByDesign.keySet
-    assert(undocumented.isEmpty,
-      s"queries with neither an oracle nor a rows-only justification: $undocumented")
-    val staleRowsOnly = rowsOnlyByDesign.keySet -- noOracle
-    assert(staleRowsOnly.isEmpty,
-      s"rows-only list entries that now HAVE oracles (prune the list): $staleRowsOnly")
-    rowsOnlyByDesign.foreach { case (q, twin) =>
+    // a record always carries SQL or a twin; a twin must itself be a
+    // registered query with SQL
+    val twins = registry.Registry.byName.values.collect {
+      case registry.Query(q, _, registry.Twin(twin)) => q -> twin }
+    assert(twins.nonEmpty)
+    twins.foreach { case (q, twin) =>
       assert(SparkEntry.queries.contains(twin) &&
         SparkEntry.oracleSql.contains(twin),
         s"rows-only query $q lacks an oracle-backed portable twin $twin")
     }
+    assert(SparkEntry.oracleSql.size + twins.size == SparkEntry.queries.size)
   }
 
-  test("every oracle key is a registered query") {
-    val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphan.isEmpty, s"oracles with no registered query: $orphan")
+  test("a query name can be registered only once") {
+    val build: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame = (s, _) => s.range(1).toDF()
+    val q = registry.Query("q_dup", build, registry.Query.sql("SELECT 1"))
+    val e = intercept[IllegalArgumentException] {
+      registry.Registry.index(Seq(q, q.copy(oracle = registry.Twin("q_x"))))
+    }
+    assert(e.getMessage.contains("q_dup"))
+    assert(registry.Registry.index(Seq(q)).keySet == Set("q_dup"))
   }
 
   private def fileText(name: String): String = {

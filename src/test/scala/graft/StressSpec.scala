@@ -66,4 +66,23 @@ class StressSpec extends SparkSpec {
   test("every factor-guarded query is registered") {
     assert(Stress.maxFactor.keySet -- SparkEntry.queries.keySet == Set.empty)
   }
+
+  test("cleanUp removes the replica and only the graft_*_<tag> dirs built for it") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stress-tmp")
+    val replica = tmp.resolve("graft_stress_src_x3")
+    val tag = SparkEntry.dirTag(replica.toString)
+    def mk(name: String) = {
+      val d = tmp.resolve(name)
+      java.nio.file.Files.createDirectories(d.resolve("t"))
+      java.nio.file.Files.writeString(d.resolve("t/part.parquet"), "x")
+      d
+    }
+    val own = Seq(mk("graft_stress_src_x3"), mk(s"graft_graph_$tag"),
+      mk(s"graft_ingestidx_$tag"))
+    val others = Seq(mk("graft_graph__root_testdata_sf0_001"),
+      mk(s"other_graph_$tag"), mk(s"graft_graph_${tag}_2"))
+    Stress.cleanUp(replica.toString, tmp.toString)
+    own.foreach(d => assert(!java.nio.file.Files.exists(d), d))
+    others.foreach(d => assert(java.nio.file.Files.exists(d), d))
+  }
 }
