@@ -516,6 +516,29 @@ object Analytics {
       .orderBy(col("variant"))
   }
 
+  /** The (key, day) panel every daily-series statistic reads: one row
+    * per key and present calendar day of `events`, keyed as `key`, with
+    * the day's row count `y` — or the aggregates `ys` in its place. Rows
+    * with a null key or time are dropped unless `dropNulls` is off. The
+    * grouping is the only data-sized shuffle; the panel is bounded by
+    * keys x day span. */
+  private def dailyPanel(events: DataFrame, keyCol: String, tsCol: String,
+      key: String = "t", dropNulls: Boolean = true,
+      ys: Seq[Column] = Seq(count(lit(1)).as("y"))): DataFrame = {
+    val in = if (dropNulls)
+      events.where(col(keyCol).isNotNull && col(tsCol).isNotNull)
+    else events
+    in.groupBy(col(keyCol).as(key), col(tsCol).cast("date").as("day"))
+      .agg(ys.head, ys.tail: _*)
+  }
+
+  /** [[dailyPanel]]'s two series for the rank correlations: the count
+    * `ya` and the cents sum of `valueCol` as `yb`. */
+  private def countAndCents(valueCol: String): Seq[Column] = Seq(
+    count(lit(1)).as("ya"),
+    coalesce(sum((col(valueCol).cast("decimal(18,2)") * 100)
+      .cast("long")), lit(0L)).as("yb"))
+
   /** Single change-point detection by exact-integer CUSUM over the daily
     * volume series — [[dailyTrend]] answers "is it drifting", this
     * answers "WHEN did it shift" (deploy regressions, data-source cutoffs,
@@ -536,9 +559,7 @@ object Analytics {
   def changePoints(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, typeCol, tsCol, dropNulls = false)
       .localCheckpoint()
     val tot = daily.groupBy(col("t"))
       .agg(count(lit(1)).as("n_days"), sum(col("y")).as("s"))
@@ -744,9 +765,7 @@ object Analytics {
     */
   def dailyTrend(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
-    val daily = events
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, typeCol, tsCol, dropNulls = false)
       .localCheckpoint()
     val anchor = daily.agg(min(col("day")).as("day0"))
     val agg = daily.crossJoin(broadcast(anchor))
@@ -1530,6 +1549,70 @@ object Analytics {
       .groupBy(col("arm"), col("t"))
       .agg(sum(col("d")).as("d"), sum(col("c")).as("c"))
 
+  /** The two-arm risk set over a [[kmStratumGrid]]-shaped grid: deaths
+    * and censorings per t — per (stratum, t) when `stratified` — split
+    * by arm (d0/c0, d1/c1), and each arm's exact at-risk count n0/n1
+    * before t, from integer cumulative windows over the bounded grid
+    * (the pooled form partitions on a constant key — the bounded-input
+    * idiom). */
+  private def survivalRiskSet(grid: DataFrame,
+      stratified: Boolean): DataFrame = {
+    val key = if (stratified) Seq(col("stratum")) else Nil
+    val part = if (stratified) col("stratum") else lit(0)
+    val byT = grid.groupBy(key :+ col("t"): _*)
+      .agg(sum(when(col("arm") === 0, col("d")).otherwise(0L)).as("d0"),
+        sum(when(col("arm") === 0, col("c")).otherwise(0L)).as("c0"),
+        sum(when(col("arm") === 1, col("d")).otherwise(0L)).as("d1"),
+        sum(when(col("arm") === 1, col("c")).otherwise(0L)).as("c1"))
+    val w = Window.partitionBy(part).orderBy(col("t"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val tot = Window.partitionBy(part)
+    byT
+      .withColumn("n0", sum(col("d0") + col("c0")).over(tot) -
+        coalesce(sum(col("d0") + col("c0")).over(w), lit(0L)))
+      .withColumn("n1", sum(col("d1") + col("c1")).over(tot) -
+        coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
+  }
+
+  /** The log-rank statistic over a [[survivalRiskSet]]: per death time
+    * the hypergeometric E/V terms, each micro-quantized before the sum,
+    * then O/E/V summed over every risk set, `totals` (one row) in front,
+    * and z at 4 dp with the verdict against `critZ`. */
+  private def logRankZ(risk: DataFrame, totals: DataFrame,
+      critZ: Double): DataFrame = {
+    risk
+      .withColumn("n", col("n0") + col("n1"))
+      .withColumn("d", col("d0") + col("d1"))
+      .where(col("d") > 0 && col("n") > 0)
+      .withColumn("e0_micro", expr(
+        """CAST(floor(CAST(d AS DOUBLE) * CAST(n0 AS DOUBLE)
+          |  / CAST(n AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)""".stripMargin))
+      .withColumn("v_micro", expr(
+        """CASE WHEN n > 1 THEN
+          |  CAST(floor(CAST(d AS DOUBLE)
+          |    * (CAST(n0 AS DOUBLE) / CAST(n AS DOUBLE))
+          |    * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
+          |    * (CAST(n - d AS DOUBLE) / CAST(n - 1 AS DOUBLE))
+          |    * 1000000.0 + 0.5) AS BIGINT)
+          |ELSE CAST(0 AS BIGINT) END""".stripMargin))
+      .agg(
+        coalesce(sum(col("d0")), lit(0L)).as("o0"),
+        coalesce(sum(col("d1")), lit(0L)).as("o1"),
+        coalesce(sum(col("e0_micro")), lit(0L)).as("e0_micro"),
+        coalesce(sum(col("v_micro")), lit(0L)).as("v_micro"))
+      .crossJoin(broadcast(totals))
+      .select(totals.columns.map(col) ++ Seq(col("o0"), col("o1"),
+        col("e0_micro"), col("v_micro"),
+        when(col("v_micro") > 0, expr(
+          """CAST(floor((CAST(o0 AS DOUBLE)
+            |  - CAST(e0_micro AS DOUBLE) / 1000000.0)
+            |  / sqrt(CAST(v_micro AS DOUBLE) / 1000000.0)
+            |  * 10000.0 + 0.5) AS DOUBLE) / 10000.0""".stripMargin))
+          .as("z_r")): _*)
+      .withColumn("significant",
+        when(col("z_r").isNotNull, abs(col("z_r")) > critZ))
+  }
+
   /** Log-rank test (Mantel–Cox) — [[kaplanMeier]]'s significance
     * companion: does arm 0 convert at a different RATE than arm 1, over
     * the whole curve, censoring-honest? At each death time t the
@@ -1558,53 +1641,12 @@ object Analytics {
       typeCol: String = "event_type"): DataFrame = {
     val grid = kmDurationGrid(events, userCol, tsCol, eventType, typeCol)
       .localCheckpoint() // bounded (arm, duration) grid, two consumers
-    val byT = grid.groupBy(col("t"))
-      .agg(sum(when(col("arm") === 0, col("d")).otherwise(0L)).as("d0"),
-        sum(when(col("arm") === 0, col("c")).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1, col("d")).otherwise(0L)).as("d1"),
-        sum(when(col("arm") === 1, col("c")).otherwise(0L)).as("c1"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tot = Window.partitionBy(lit(0))
-    val risk = byT
-      .withColumn("n0", sum(col("d0") + col("c0")).over(tot) -
-        coalesce(sum(col("d0") + col("c0")).over(w), lit(0L)))
-      .withColumn("n1", sum(col("d1") + col("c1")).over(tot) -
-        coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
-      .withColumn("n", col("n0") + col("n1"))
-      .withColumn("d", col("d0") + col("d1"))
-    val terms = risk.where(col("d") > 0 && col("n") > 0)
-      .withColumn("e0_micro", expr(
-        """CAST(floor(CAST(d AS DOUBLE) * CAST(n0 AS DOUBLE)
-          |  / CAST(n AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)""".stripMargin))
-      .withColumn("v_micro", expr(
-        """CASE WHEN n > 1 THEN
-          |  CAST(floor(CAST(d AS DOUBLE)
-          |    * (CAST(n0 AS DOUBLE) / CAST(n AS DOUBLE))
-          |    * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-          |    * (CAST(n - d AS DOUBLE) / CAST(n - 1 AS DOUBLE))
-          |    * 1000000.0 + 0.5) AS BIGINT)
-          |ELSE CAST(0 AS BIGINT) END""".stripMargin))
-    terms.agg(
-      coalesce(sum(col("d0")), lit(0L)).as("o0"),
-      coalesce(sum(col("d1")), lit(0L)).as("o1"),
-      coalesce(sum(col("e0_micro")), lit(0L)).as("e0_micro"),
-      coalesce(sum(col("v_micro")), lit(0L)).as("v_micro"))
-      .crossJoin(broadcast(grid.agg(
+    logRankZ(survivalRiskSet(grid, stratified = false),
+      grid.agg(
         coalesce(sum(when(col("arm") === 0, col("d") + col("c"))
           .otherwise(0L)), lit(0L)).as("n0_total"),
         coalesce(sum(when(col("arm") === 1, col("d") + col("c"))
-          .otherwise(0L)), lit(0L)).as("n1_total"))))
-      .select(col("n0_total"), col("n1_total"), col("o0"), col("o1"),
-        col("e0_micro"), col("v_micro"),
-        when(col("v_micro") > 0, expr(
-          """CAST(floor((CAST(o0 AS DOUBLE)
-            |  - CAST(e0_micro AS DOUBLE) / 1000000.0)
-            |  / sqrt(CAST(v_micro AS DOUBLE) / 1000000.0)
-            |  * 10000.0 + 0.5) AS DOUBLE) / 10000.0""".stripMargin))
-          .as("z_r"))
-      .withColumn("significant",
-        when(col("z_r").isNotNull, abs(col("z_r")) > critZ))
+          .otherwise(0L)), lit(0L)).as("n1_total")), critZ)
   }
 
   /** STRATIFIED log-rank — [[logRankTest]] with the standard confounder
@@ -1626,50 +1668,8 @@ object Analytics {
       typeCol: String = "event_type"): DataFrame = {
     val grid = kmStratumGrid(events, userCol, tsCol, eventType, typeCol)
       .localCheckpoint() // bounded (stratum, arm, duration) grid
-    val byT = grid.groupBy(col("stratum"), col("t"))
-      .agg(sum(when(col("arm") === 0, col("d")).otherwise(0L)).as("d0"),
-        sum(when(col("arm") === 0, col("c")).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1, col("d")).otherwise(0L)).as("d1"),
-        sum(when(col("arm") === 1, col("c")).otherwise(0L)).as("c1"))
-    val w = Window.partitionBy(col("stratum")).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tot = Window.partitionBy(col("stratum"))
-    val risk = byT
-      .withColumn("n0", sum(col("d0") + col("c0")).over(tot) -
-        coalesce(sum(col("d0") + col("c0")).over(w), lit(0L)))
-      .withColumn("n1", sum(col("d1") + col("c1")).over(tot) -
-        coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
-      .withColumn("n", col("n0") + col("n1"))
-      .withColumn("d", col("d0") + col("d1"))
-    val terms = risk.where(col("d") > 0 && col("n") > 0)
-      .withColumn("e0_micro", expr(
-        """CAST(floor(CAST(d AS DOUBLE) * CAST(n0 AS DOUBLE)
-          |  / CAST(n AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)""".stripMargin))
-      .withColumn("v_micro", expr(
-        """CASE WHEN n > 1 THEN
-          |  CAST(floor(CAST(d AS DOUBLE)
-          |    * (CAST(n0 AS DOUBLE) / CAST(n AS DOUBLE))
-          |    * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-          |    * (CAST(n - d AS DOUBLE) / CAST(n - 1 AS DOUBLE))
-          |    * 1000000.0 + 0.5) AS BIGINT)
-          |ELSE CAST(0 AS BIGINT) END""".stripMargin))
-    terms.agg(
-      coalesce(sum(col("d0")), lit(0L)).as("o0"),
-      coalesce(sum(col("d1")), lit(0L)).as("o1"),
-      coalesce(sum(col("e0_micro")), lit(0L)).as("e0_micro"),
-      coalesce(sum(col("v_micro")), lit(0L)).as("v_micro"))
-      .crossJoin(broadcast(grid.agg(
-        countDistinct(col("stratum")).as("n_strata"))))
-      .select(col("n_strata"), col("o0"), col("o1"),
-        col("e0_micro"), col("v_micro"),
-        when(col("v_micro") > 0, expr(
-          """CAST(floor((CAST(o0 AS DOUBLE)
-            |  - CAST(e0_micro AS DOUBLE) / 1000000.0)
-            |  / sqrt(CAST(v_micro AS DOUBLE) / 1000000.0)
-            |  * 10000.0 + 0.5) AS DOUBLE) / 10000.0""".stripMargin))
-          .as("z_r"))
-      .withColumn("significant",
-        when(col("z_r").isNotNull, abs(col("z_r")) > critZ))
+    logRankZ(survivalRiskSet(grid, stratified = true),
+      grid.agg(countDistinct(col("stratum")).as("n_strata")), critZ)
   }
 
   /** Cox proportional-hazards SCORE at a fixed hazard ratio — the
@@ -1709,19 +1709,7 @@ object Analytics {
     require(hr > 0.0, s"hazard ratio must be positive, got $hr")
     val grid = kmStratumGrid(events, userCol, tsCol, eventType, typeCol)
       .localCheckpoint() // bounded (stratum, arm, duration) grid
-    val byT = grid.groupBy(col("stratum"), col("t"))
-      .agg(sum(when(col("arm") === 0, col("d")).otherwise(0L)).as("d0"),
-        sum(when(col("arm") === 0, col("c")).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1, col("d")).otherwise(0L)).as("d1"),
-        sum(when(col("arm") === 1, col("c")).otherwise(0L)).as("c1"))
-    val w = Window.partitionBy(col("stratum")).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tot = Window.partitionBy(col("stratum"))
-    val risk = byT
-      .withColumn("n0", sum(col("d0") + col("c0")).over(tot) -
-        coalesce(sum(col("d0") + col("c0")).over(w), lit(0L)))
-      .withColumn("n1", sum(col("d1") + col("c1")).over(tot) -
-        coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
+    val risk = survivalRiskSet(grid, stratified = true)
     // hr inlined as its full decimal string so both engines parse the
     // identical IEEE double (the hllC constant discipline)
     val hrLit = java.lang.Double.toString(hr)
@@ -1781,19 +1769,7 @@ object Analytics {
       typeCol: String = "event_type"): DataFrame = {
     val grid = kmStratumGrid(events, userCol, tsCol, eventType, typeCol)
       .localCheckpoint() // bounded (stratum, arm, duration) grid
-    val byT = grid.groupBy(col("stratum"), col("t"))
-      .agg(sum(when(col("arm") === 0, col("d")).otherwise(0L)).as("d0"),
-        sum(when(col("arm") === 0, col("c")).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1, col("d")).otherwise(0L)).as("d1"),
-        sum(when(col("arm") === 1, col("c")).otherwise(0L)).as("c1"))
-    val w = Window.partitionBy(col("stratum")).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tot = Window.partitionBy(col("stratum"))
-    val risk = byT
-      .withColumn("n0", sum(col("d0") + col("c0")).over(tot) -
-        coalesce(sum(col("d0") + col("c0")).over(w), lit(0L)))
-      .withColumn("n1", sum(col("d1") + col("c1")).over(tot) -
-        coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
+    val risk = survivalRiskSet(grid, stratified = true)
     val spark = events.sparkSession
     import spark.implicits._
     val ladder = Seq(50L, 100L, 200L, 400L).toDF("hr_pct")
@@ -1859,21 +1835,9 @@ object Analytics {
     require(hr >= 1L, s"hazard ratio must be >= 1, got $hr")
     val grid = kmStratumGrid(events, userCol, tsCol, eventType, typeCol)
       .localCheckpoint() // bounded (stratum, arm, duration) grid
-    val byT = grid.groupBy(col("stratum"), col("t"))
-      .agg(sum(when(col("arm") === 0, col("d")).otherwise(0L)).as("d0"),
-        sum(when(col("arm") === 0, col("c")).otherwise(0L)).as("c0"),
-        sum(when(col("arm") === 1, col("d")).otherwise(0L)).as("d1"),
-        sum(when(col("arm") === 1, col("c")).otherwise(0L)).as("c1"))
-    val w = Window.partitionBy(col("stratum")).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val tot = Window.partitionBy(col("stratum"))
     val cum = Window.partitionBy(col("stratum")).orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byT
-      .withColumn("n0", sum(col("d0") + col("c0")).over(tot) -
-        coalesce(sum(col("d0") + col("c0")).over(w), lit(0L)))
-      .withColumn("n1", sum(col("d1") + col("c1")).over(tot) -
-        coalesce(sum(col("d1") + col("c1")).over(w), lit(0L)))
+    survivalRiskSet(grid, stratified = true)
       .withColumn("d", col("d0") + col("d1"))
       .withColumn("h0_micro",
         when(col("n0") + lit(hr) * col("n1") > 0,
@@ -1909,10 +1873,7 @@ object Analytics {
     */
   def mannKendallTrend(events: DataFrame, typeCol: String, tsCol: String,
       critZ: Double = 1.96): DataFrame = {
-    val daily = events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, typeCol, tsCol)
       .localCheckpoint() // bounded (type, day) panel, three consumers
     val n = daily.groupBy(col("t")).agg(count(lit(1)).as("n_days"))
     val ties = daily.groupBy(col("t"), col("y"))
@@ -1994,10 +1955,7 @@ object Analytics {
     */
   def theilSenForecast(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
-    val daily = events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, typeCol, tsCol)
       .localCheckpoint() // bounded (type, day) panel, two consumers
     val base = daily.groupBy(col("t"))
       .agg(min(col("day")).as("day0"), max(col("day")).as("day_last"),
@@ -2494,10 +2452,7 @@ object Analytics {
     */
   def fanoDaily(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
-    events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    dailyPanel(events, typeCol, tsCol)
       .groupBy(col("t"))
       .agg(count(lit(1)).as("n_days"),
         sum(col("y")).cast("decimal(38,0)").as("s"),
@@ -2544,10 +2499,7 @@ object Analytics {
     */
   def runsTestDaily(events: DataFrame, typeCol: String,
       tsCol: String): DataFrame = {
-    val daily = events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, typeCol, tsCol)
       .localCheckpoint() // bounded panel, three consumers
     val n = daily.groupBy(col("t")).agg(count(lit(1)).as("n_days"))
     val wMed = Window.partitionBy(col("t")).orderBy(col("y"))
@@ -2610,10 +2562,7 @@ object Analytics {
     require(lags.nonEmpty && lags.forall(_ >= 1), s"bad lags $lags")
     val spark = events.sparkSession
     import spark.implicits._
-    val daily = events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, typeCol, tsCol)
     val wDay = Window.partitionBy(col("t")).orderBy(col("day"))
     val stats = Window.partitionBy(col("t"))
     val base = daily
@@ -2672,12 +2621,7 @@ object Analytics {
     */
   def spearmanDaily(events: DataFrame, typeCol: String, tsCol: String,
       valueCol: String): DataFrame = {
-    val daily = events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("ya"),
-        coalesce(sum((col(valueCol).cast("decimal(18,2)") * 100)
-          .cast("long")), lit(0L)).as("yb"))
+    val daily = dailyPanel(events, typeCol, tsCol, ys = countAndCents(valueCol))
     val ranked = daily
       .withColumn("ra", rank().over(Window.partitionBy(col("t"))
         .orderBy(col("ya"))).cast("long") * 2
@@ -2720,12 +2664,7 @@ object Analytics {
     */
   def kendallTauDaily(events: DataFrame, typeCol: String, tsCol: String,
       valueCol: String): DataFrame = {
-    val daily = events
-      .where(col(typeCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(typeCol).as("t"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("ya"),
-        coalesce(sum((col(valueCol).cast("decimal(18,2)") * 100)
-          .cast("long")), lit(0L)).as("yb"))
+    val daily = dailyPanel(events, typeCol, tsCol, ys = countAndCents(valueCol))
       .localCheckpoint() // bounded panel, three consumers
     val pairs = daily.as("a").join(daily.as("b"),
         col("a.t") === col("b.t") && col("a.day") < col("b.day"))
@@ -2825,10 +2764,7 @@ object Analytics {
     */
   def dowAnomalyBands(events: DataFrame, groupCol: String,
       tsCol: String): DataFrame = {
-    val daily = events
-      .where(col(groupCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(groupCol).as("g"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, groupCol, tsCol, key = "g")
       .withColumn("dow", (dayofweek(col("day")) - 1).cast("long"))
     val dowW = Window.partitionBy(col("g"), col("dow"))
     daily
@@ -2873,10 +2809,7 @@ object Analytics {
     */
   def forecastBacktest(events: DataFrame, groupCol: String,
       tsCol: String): DataFrame = {
-    val daily = events
-      .where(col(groupCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(groupCol).as("g"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, groupCol, tsCol, key = "g")
     val byDay = Window.partitionBy(col("g")).orderBy(col("day"))
     val scored = daily
       .withColumn("y1", lag(col("y"), 1).over(byDay))
@@ -2998,10 +2931,7 @@ object Analytics {
     */
   def stlDecompose(events: DataFrame, groupCol: String,
       tsCol: String): DataFrame = {
-    val daily = events
-      .where(col(groupCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(groupCol).as("g"), col(tsCol).cast("date").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyPanel(events, groupCol, tsCol, key = "g")
       .localCheckpoint() // bounded (group, day) panel
     // centered 7-day mean over ROW positions (the panel has one row
     // per present day; a missing calendar day shrinks the window —

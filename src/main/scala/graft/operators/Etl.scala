@@ -127,14 +127,8 @@ object Etl {
       qtyCol: String,
       lotIdCol: String,
       snapshotDate: String): DataFrame =
-    lots
-      .where(col(statusCol).isin(activeStatuses: _*))
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        moneySum(col(qtyCol)).as("wip_qty"),
-        countDistinct(col(lotIdCol)).as("lot_count"),
-        moneyAvg(col(qtyCol)).as("avg_qty_per_lot"))
-      .withColumn("snapshot_date", lit(snapshotDate))
+    wip(lots, statusCol, activeStatuses, groupCols, qtyCol, lotIdCol,
+      snapshotDate)
 
   /** Tenant-custom WIP variant with a conditional "high priority" count.
     * Reference: etl/tenants/project_01/assets/transfer.py:14. The reference
@@ -151,14 +145,22 @@ object Etl {
       priorityCol: String,
       highPriority: String,
       snapshotDate: String): DataFrame =
+    wip(lots, statusCol, activeStatuses, groupCols, qtyCol, lotIdCol,
+      snapshotDate,
+      count(when(col(priorityCol) === highPriority, lit(1))).as("high_priority_count"))
+
+  /** The WIP pass both variants run: the status filter, one groupBy, the
+    * three base aggregates and then `extra`, and the snapshot date. */
+  private def wip(lots: DataFrame, statusCol: String,
+      activeStatuses: Seq[String], groupCols: Seq[String], qtyCol: String,
+      lotIdCol: String, snapshotDate: String, extra: Column*): DataFrame =
     lots
       .where(col(statusCol).isin(activeStatuses: _*))
       .groupBy(groupCols.map(col): _*)
       .agg(
         moneySum(col(qtyCol)).as("wip_qty"),
-        countDistinct(col(lotIdCol)).as("lot_count"),
-        moneyAvg(col(qtyCol)).as("avg_qty_per_lot"),
-        count(when(col(priorityCol) === highPriority, lit(1))).as("high_priority_count"))
+        Seq(countDistinct(col(lotIdCol)).as("lot_count"),
+          moneyAvg(col(qtyCol)).as("avg_qty_per_lot")) ++ extra: _*)
       .withColumn("snapshot_date", lit(snapshotDate))
 
   /** Cycle time: join fact-to-fact, day delta, min/avg/max per group.

@@ -1672,33 +1672,20 @@ object Graph {
   }
 
   /** Day-axis PageRank warm fold (r14 — the inductive generalization of
-    * the two-day close handoff): fold the SAME [[warmRankLoop]] over a
-    * Seq of day deltas, each day's post-warm vector seeding the next —
-    * the handoff is an in-plan localCheckpoint, so NO new state table
-    * per day is needed (production persists whichever day's vector it
-    * closes on with [[writeWarmRankVectorTable]], exactly as before).
-    * Each day's delta must be the CUMULATIVE order-log slice through
-    * that day: trade edges are additive over an order-date split and
-    * [[warmRankLoop]] dedups delta-vs-base and rebuilds degrees itself,
-    * so cumulative-delta-over-the-day-0-base is the SAME graph as
-    * day-delta-over-a-compacted-base — the equivalence q_daily_close2's
-    * oracle already certifies for one handoff; the fold proves it holds
-    * inductively (state schema and contract stable under N days).
-    * Returns each day's full (node, pr, deg) vector. */
-  def pageRankWarmFold(spark: SparkSession, baseTable: String,
-      vectorTable: String, cumDeltas: Seq[(DataFrame, DataFrame)],
-      incrIters: Int = 3): Seq[DataFrame] = {
-    val stager = new Dedup.RoundStager(spark, None)
-    var vec = spark.table(vectorTable).select(col("node"), col("pr"))
-    cumDeltas.map { case (o, l) =>
-      val v = warmRankLoop(spark.table(baseTable), vec, o, l, incrIters,
-        stager).localCheckpoint()
-      vec = v.select(col("node"), col("pr"))
-      v
-    }
-  }
-
-  /** [[pageRankWarmFold]] off ONE day-tagged symmetric delta edge frame
+    * the two-day close handoff): fold the SAME warm rank rounds over the
+    * days, each day's post-warm vector seeding the next — the handoff is
+    * an in-plan localCheckpoint, so NO new state table per day is needed
+    * (production persists whichever day's vector it closes on with
+    * [[writeWarmRankVectorTable]], exactly as before). Day d's delta is
+    * the CUMULATIVE order-log slice through that day: trade edges are
+    * additive over an order-date split, so cumulative-delta-over-the-
+    * day-0-base is the SAME graph as day-delta-over-a-compacted-base —
+    * the equivalence q_daily_close2's oracle already certifies for one
+    * handoff; the fold proves it holds inductively (state schema and
+    * contract stable under N days). Returns each day's full
+    * (node, pr, deg) vector.
+    *
+    * The delta is ONE day-tagged symmetric delta edge frame
     * (src, dst, day): row set sliced at `day <= d` must be set-equal to
     * `tradeEdges(dayOrders, lineitem)` for day d's cumulative slice —
     * cumulative slices NEST, so the whole fold pays the base-table probe,
@@ -1707,8 +1694,8 @@ object Graph {
     * the day filter (extra touched rows from later days have srcs absent
     * from earlier slices, so they cannot match there), and the per-day
     * degree aggregate runs over the same row set — every day's warm
-    * chain is frame-identical to the per-day derivation's, so ranks are
-    * byte-equal to the two-table fold's. */
+    * chain is frame-identical to a per-day [[warmRankLoop]], so ranks are
+    * byte-equal to it. */
   def pageRankWarmFoldTagged(spark: SparkSession, baseTable: String,
       vectorTable: String, taggedDeltaEdges: DataFrame, days: Int,
       incrIters: Int = 3): Seq[DataFrame] = {
@@ -1746,7 +1733,7 @@ object Graph {
     }
   }
 
-  /** [[pageRankWarmFold]]'s community twin: fold [[warmLabelLoop]] over
+  /** [[pageRankWarmFoldTagged]]'s community twin: fold [[warmLabelLoop]] over
     * cumulative day delta edges (co-supply weights are additive over
     * the order-log split); each day's raw (node, label) vector seeds
     * the next via an in-plan localCheckpoint. Publish a day's face with
@@ -1923,17 +1910,6 @@ object Graph {
     warm
   }
 
-  /** [[bfsLayers]] against the bucketed edge table, with the visited set
-    * as an appendable bucketed table instead of a broadcast — identical
-    * layer rows (set semantics, spec-proven). Per round: the frontier
-    * merge-joins into the in-place edge scan (frontier is the exchanged
-    * side), candidates anti-join the bucketed visited table (candidates
-    * are the exchanged side), and the new frontier APPENDS into the
-    * visited table's buckets — the visited set never moves again. No
-    * broadcast grows with the graph, so the traversal survives node
-    * counts where [[bfsLayers]]' `broadcast(visited)` cannot fit an
-    * executor.
-    */
   /** Persist the per-node BFS layer vector over a bucketed edge table —
     * the stored traversal state [[bfsLayersDecide]] warm-starts from
     * (the writeRankVectorTable discipline applied to layers): `maxHops`
@@ -2084,6 +2060,17 @@ object Graph {
       .saveAsTable(seedTable)
   }
 
+  /** [[bfsLayers]] against the bucketed edge table, with the visited set
+    * as an appendable bucketed table instead of a broadcast — identical
+    * layer rows (set semantics, spec-proven). Per round: the frontier
+    * merge-joins into the in-place edge scan (frontier is the exchanged
+    * side), candidates anti-join the bucketed visited table (candidates
+    * are the exchanged side), and the new frontier APPENDS into the
+    * visited table's buckets — the visited set never moves again. No
+    * broadcast grows with the graph, so the traversal survives node
+    * counts where [[bfsLayers]]' `broadcast(visited)` cannot fit an
+    * executor.
+    */
   def bfsLayersBucketed(spark: SparkSession, table: String,
       visitedTable: String, visitedRoot: String, buckets: Int,
       customer: DataFrame, seedNationKey: Int, maxHops: Int = 4,

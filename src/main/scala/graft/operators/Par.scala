@@ -74,23 +74,11 @@ private[graft] object Par {
     } finally pool.shutdown()
   }
 
+  /** The one heterogeneous fan-out: two thunks of different result
+    * types. Same-typed thunks go through [[seq]]. */
   def run2[A, B](a: () => A, b: () => B): (A, B) = {
     val r = runAll(Seq(a, b))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
-  }
-
-  def run4[A, B, C, D](a: () => A, b: () => B, c: () => C,
-      d: () => D): (A, B, C, D) = {
-    val r = runAll(Seq(a, b, c, d))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
-      r(3).asInstanceOf[D])
-  }
-
-  def run5[A, B, C, D, E](a: () => A, b: () => B, c: () => C, d: () => D,
-      e: () => E): (A, B, C, D, E) = {
-    val r = runAll(Seq(a, b, c, d, e))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
-      r(3).asInstanceOf[D], r(4).asInstanceOf[E])
   }
 
   /** Homogeneous fan-out — used where a Seq of same-typed independent

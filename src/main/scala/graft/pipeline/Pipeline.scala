@@ -154,10 +154,6 @@ object Pipeline {
       .sorted.toSeq
   }
 
-  /** Dataset-level upsert into a keyed parquet table: existing rows whose
-    * keys collide with `updates` are replaced, others kept. The scalable
-    * form of trino.upsert_dataframe (reference: etl/resources/trino.py:165).
-    */
   /** Materialize a DataFrame as a bucketed, bucket-sorted external table:
     * the persistent co-location contract. The bucketing shuffle is paid
     * ONCE at write; every later equi-join or aggregation on `key` between
@@ -227,6 +223,10 @@ object Pipeline {
       .write
       .mode(SaveMode.Overwrite).parquet(path)
 
+  /** Dataset-level upsert into a keyed parquet table: existing rows whose
+    * keys collide with `updates` are replaced, others kept. The scalable
+    * form of trino.upsert_dataframe (reference: etl/resources/trino.py:165).
+    */
   def upsertTable(spark: SparkSession, tablePath: String, updates: DataFrame, keys: Seq[String]): Unit = {
     val merged =
       if (new java.io.File(tablePath).exists()) {

@@ -128,18 +128,19 @@ private[graft] object GraphQueries {
     // serializes ~30 mostly-idle jobs. Overlap them (Par):
     // identical frames per fold, same per-fold round order, byte-equal
     // digests.
-    graft.operators.Par.run4(
-      () => graft.operators.Ingest.ingestChain(
+    val Seq(Seq(chain), prVecs, lpaVecs, skels) = graft.operators.Par.seq(Seq(
+      () => Seq(graft.operators.Ingest.ingestChain(
         graft.operators.Ingest.signatureIndex(ingestCorpusSlice(s, dir), 64),
         Seq(ingestBatch1(s, dir), ingestBatch2a(s, dir),
-          ingestBatch3a(s, dir))).localCheckpoint(),
+          ingestBatch3a(s, dir))).localCheckpoint()),
       () => G.pageRankWarmFoldTagged(s, gredgesBaseTable(s, dir),
         gprVectorTable(s, dir), tradeTagged, days = 3),
       () => G.labelPropagationWarmFold(s, gcosupBaseTable(s, dir),
         glpaVectorTable(s, dir), coCums, preStaged = true),
       () => G.knnSkeletonFold(s, gcosupBaseTable(s, dir),
         gskelBaseTable(s, dir), (1 to 3).map(coInc), k = 5,
-        cumDeltaEdges = Some(coCums)))
+        cumDeltaEdges = Some(coCums))))
+    (chain, prVecs, lpaVecs, skels)
   }
 
   /** A day's published top-20 PageRank face off its full warm vector. */
@@ -486,7 +487,7 @@ private[graft] object GraphQueries {
         Tables.customer(s, dir), seedNationKey = 1, maxHops = 4,
         nodesTable = Some(nodesT), seedTable = Some(seedT))
     },
-      sql(bfsLayersReplaySql)),
+      bfsLayersOracle),
 
     // §2.67p — the RECURRING BFS refresh (r12, the decide shape for the
     // traversal member): yesterday's layer vector at rest, the day's new
@@ -506,7 +507,7 @@ private[graft] object GraphQueries {
     },
       // the refresh is exact, so the identical full-graph replay
       // certifies the decide too
-      sql(bfsLayersReplaySql)),
+      bfsLayersOracle),
 
     // §2.67d — label-propagation communities over the NON-bipartite
     // co-supply projection (suppliers linked when they fill the same
@@ -859,29 +860,7 @@ private[graft] object GraphQueries {
       graft.operators.Graph.triangleStatsOriented(
         s.table(gskelTable(s, dir)).select(col("src"), col("dst"), col("w")),
         byDegree = true),
-      sql(s"""WITH $knnSkeletonCtes,
-        |e AS MATERIALIZED (SELECT a, b FROM knn),
-        |deg AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-        |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        |  GROUP BY 1),
-        |tri AS (
-        |  SELECT ab.a AS x, ab.b AS y, bc.b AS z
-        |  FROM e ab JOIN e bc ON ab.b = bc.a
-        |  JOIN e ac ON ac.a = ab.a AND ac.b = bc.b),
-        |pn AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS n_tri FROM (
-        |    SELECT x AS node FROM tri
-        |    UNION ALL SELECT y FROM tri
-        |    UNION ALL SELECT z FROM tri)
-        |  GROUP BY 1)
-        |SELECT d.node, d.degree, COALESCE(pn.n_tri, 0) AS n_tri,
-        |  CASE WHEN d.degree >= 2
-        |    THEN (2 * COALESCE(pn.n_tri, 0) * 1000000)
-        |      // (d.degree * (d.degree - 1))
-        |    ELSE 0 END AS lcc_micro
-        |FROM deg d LEFT JOIN pn USING (node)
-        |ORDER BY node""".stripMargin)),
+      trianglesOracle),
 
     // §2.67g — the k-NN skeleton AS the product: each supplier's top-5
     // strongest trading partners with the co-occurrence weight (the
@@ -895,7 +874,7 @@ private[graft] object GraphQueries {
         .orderBy(col("src"), col("dst")),
       // the skeleton itself: symmetric top-5 union-keep edges with the
       // co-occurrence weight, off the same shared CTEs as 67e/67f
-      sql(knnSkeletonReplaySql)),
+      knnSkeletonOracle),
 
     // §2.67k — EXACT incremental skeleton refresh (r11): the delta can
     // only change its own endpoints' top-5, so the refresh recomputes
@@ -907,7 +886,7 @@ private[graft] object GraphQueries {
     Query("q_knn_graph_incr", (s, dir) => skeletonIncrFrame(s, dir),
       // the incremental refresh must reproduce the full skeleton EXACTLY —
       // the identical replay certifies it (no separate oracle shape)
-      sql(knnSkeletonReplaySql)),
+      knnSkeletonOracle),
 
     // §2.67m — triangle census over the INCREMENTALLY refreshed
     // skeleton (r11): the day's structure statistics without a full
@@ -919,29 +898,7 @@ private[graft] object GraphQueries {
         skeletonIncrFrameU(s, dir), byDegree = true),
       // census over the refreshed skeleton == census over the full one
       // (the refresh is exact), so the q_triangles replay certifies it
-      sql(s"""WITH $knnSkeletonCtes,
-        |e AS MATERIALIZED (SELECT a, b FROM knn),
-        |deg AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-        |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        |  GROUP BY 1),
-        |tri AS (
-        |  SELECT ab.a AS x, ab.b AS y, bc.b AS z
-        |  FROM e ab JOIN e bc ON ab.b = bc.a
-        |  JOIN e ac ON ac.a = ab.a AND ac.b = bc.b),
-        |pn AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS n_tri FROM (
-        |    SELECT x AS node FROM tri
-        |    UNION ALL SELECT y FROM tri
-        |    UNION ALL SELECT z FROM tri)
-        |  GROUP BY 1)
-        |SELECT d.node, d.degree, COALESCE(pn.n_tri, 0) AS n_tri,
-        |  CASE WHEN d.degree >= 2
-        |    THEN (2 * COALESCE(pn.n_tri, 0) * 1000000)
-        |      // (d.degree * (d.degree - 1))
-        |    ELSE 0 END AS lcc_micro
-        |FROM deg d LEFT JOIN pn USING (node)
-        |ORDER BY node""".stripMargin)),
+      trianglesOracle),
 
     // §2.67n — the composed DAILY CLOSE (r12): the recurring production
     // day the engine sells piecemeal, run as ONE chain — ingest decide
@@ -968,14 +925,14 @@ private[graft] object GraphQueries {
       // probe: the close2 digest tail carried 1.6 s of ingest-decide
       // tail + 0.9 s of rank-round tail). Pure materialization — rows
       // byte-identical.
-      val (ing, pr, lpa, skel) = graft.operators.Par.run4(
+      val Seq(ing, pr, lpa, skel) = graft.operators.Par.seq(Seq(
         () => ingestDecideFrame(s, dir).localCheckpoint(),
         () => pagerankDecideFrame(s, dir).localCheckpoint(),
         () => communitiesDecideFrame(s, dir).localCheckpoint(),
         // the skeleton feeds TWO consumers (its own digest + the census);
         // both are order-free, so the unordered face skips the
         // publication sort
-        () => skeletonIncrFrameU(s, dir).localCheckpoint())
+        () => skeletonIncrFrameU(s, dir).localCheckpoint()))
       val census = graft.operators.Graph.triangleStatsOriented(
         skel, byDegree = true)
       dig("ingest", ing, pmod(col("doc_id"), lit(8)),
@@ -1066,13 +1023,13 @@ private[graft] object GraphQueries {
       // checkpoint each chain's FINAL frame inside its thunk so the
       // decides' unstaged tails run under the overlap instead of
       // serially inside the closing digest job (see q_daily_close)
-      val (skel1, ing2, pr2, lpa2, skel2) = graft.operators.Par.run5(
+      val Seq(skel1, ing2, pr2, lpa2, skel2) = graft.operators.Par.seq(Seq(
         () => s.table(gskelMidTable(s, dir))
           .select(col("src"), col("dst"), col("w")).localCheckpoint(),
         () => ingestDecide2Frame(s, dir).localCheckpoint(),
         () => pagerankDecide2Frame(s, dir).localCheckpoint(),
         () => communitiesDecide2Frame(s, dir).localCheckpoint(),
-        () => skeletonIncr2Frame(s, dir).localCheckpoint())
+        () => skeletonIncr2Frame(s, dir).localCheckpoint()))
       val cen1 = graft.operators.Graph.triangleStatsOriented(
         skel1, byDegree = true)
       val cen2 = graft.operators.Graph.triangleStatsOriented(
@@ -1121,11 +1078,11 @@ private[graft] object GraphQueries {
       // each final frame checkpointed inside its thunk so the unstaged
       // decide tails run under the overlap, not in the digest job (see
       // q_daily_close)
-      val (ing, pr, lpa, skel) = graft.operators.Par.run4(
+      val Seq(ing, pr, lpa, skel) = graft.operators.Par.seq(Seq(
         () => ingestDecide2Frame(s, dir).localCheckpoint(),
         () => pagerankDecide2Frame(s, dir).localCheckpoint(),
         () => communitiesDecide2Frame(s, dir).localCheckpoint(),
-        () => skeletonIncr2Frame(s, dir).localCheckpoint())
+        () => skeletonIncr2Frame(s, dir).localCheckpoint()))
       dig("ingest", ing, pmod(col("doc_id"), lit(8)),
           Seq(col("doc_id"), col("verdict"), col("matched_id")))
         .unionByName(dig("ingest_stored",
@@ -1278,7 +1235,7 @@ private[graft] object GraphQueries {
       // each round references its predecessor three times, and DuckDB's
       // default inlining would expand the base scan 3^8 ways (it ran out
       // of file handles before it ran out of time)
-      sql(kcoreReplaySql)),
+      kcoreOracle),
 
     // §2.67o — k-core layering over the INCREMENTALLY refreshed
     // skeleton (r12, the q_triangles_incr precedent applied to the
@@ -1291,7 +1248,7 @@ private[graft] object GraphQueries {
         skeletonIncrFrameU(s, dir), k = 6, rounds = 8),
       // the peel over the exactly-refreshed skeleton == the peel over the
       // full one, so the identical replay certifies it
-      sql(kcoreReplaySql))
+      kcoreOracle)
   )
 
   /** DuckDB replay of `Reconcile.canonRowHash` + the three commuting
@@ -1319,7 +1276,7 @@ private[graft] object GraphQueries {
   /** The full-graph BFS replay (4 unrolled EXCEPT/UNION hops) —
     * q_bfs_layers and q_bfs_decide share this one definition: the
     * incremental relaxation is exact, so both must equal it. */
-  private def bfsLayersReplaySql: String = {
+  private lazy val bfsLayersOracle: Oracle = sql {
       def hop(i: Int) =
         s"""l$i AS (
            |  SELECT DISTINCT ed.dst AS node
@@ -1465,7 +1422,7 @@ private[graft] object GraphQueries {
     * the q_triangles_incr precedent). Round CTEs are MATERIALIZED: each
     * round references its predecessor three times, and default inlining
     * would expand the base scan 3^8 ways. */
-  private def kcoreReplaySql: String = {
+  private lazy val kcoreOracle: Oracle = sql {
       def peel(i: Int) =
         s"""d$i AS MATERIALIZED (
            |  SELECT s.node, CAST(count(ei.dst) AS BIGINT) AS d
@@ -1504,6 +1461,35 @@ private[graft] object GraphQueries {
       |UNION ALL
       |SELECT b, a, w FROM knn
       |ORDER BY src, dst""".stripMargin
+  private lazy val knnSkeletonOracle: Oracle = sql(knnSkeletonReplaySql)
+
+  /** The per-node triangle census replay over the k-NN skeleton —
+    * q_triangles and q_triangles_incr share it: the refresh is exact, so
+    * the census over the refreshed skeleton equals the full one. */
+  private lazy val trianglesOracle: Oracle =
+    sql(s"""WITH $knnSkeletonCtes,
+      |e AS MATERIALIZED (SELECT a, b FROM knn),
+      |deg AS (
+      |  SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
+      |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
+      |  GROUP BY 1),
+      |tri AS (
+      |  SELECT ab.a AS x, ab.b AS y, bc.b AS z
+      |  FROM e ab JOIN e bc ON ab.b = bc.a
+      |  JOIN e ac ON ac.a = ab.a AND ac.b = bc.b),
+      |pn AS (
+      |  SELECT node, CAST(count(*) AS BIGINT) AS n_tri FROM (
+      |    SELECT x AS node FROM tri
+      |    UNION ALL SELECT y FROM tri
+      |    UNION ALL SELECT z FROM tri)
+      |  GROUP BY 1)
+      |SELECT d.node, d.degree, COALESCE(pn.n_tri, 0) AS n_tri,
+      |  CASE WHEN d.degree >= 2
+      |    THEN (2 * COALESCE(pn.n_tri, 0) * 1000000)
+      |      // (d.degree * (d.degree - 1))
+      |    ELSE 0 END AS lcc_micro
+      |FROM deg d LEFT JOIN pn USING (node)
+      |ORDER BY node""".stripMargin)
 
   /** [[twoBatchIngestCtes]] generalized to the day-axis close's THREE
     * batches (b1 unchanged; batch 2/3 split `documents % 3 = 0` at

@@ -130,20 +130,7 @@ private[graft] object SketchQueries {
       // exactly; the four theorem verdicts asserted as literal true (the
       // q_approx_audit pattern — the fold's own est/err are engine state,
       // any fold bug surfaces as a false/NULL verdict and a hash mismatch)
-      sql("""WITH it AS (
-        |  SELECT event_type AS g,
-        |    CASE WHEN user_id % 10 = 0 THEN (user_id % 40) // 10
-        |         ELSE user_id + 100 END AS item
-        |  FROM events),
-        |n AS (SELECT g, CAST(count(*) AS BIGINT) AS n_events
-        |      FROM it GROUP BY 1),
-        |e AS (SELECT g, item, CAST(count(*) AS BIGINT) AS exact_cnt
-        |      FROM it GROUP BY 1, 2)
-        |SELECT e.g AS group_key, e.item, e.exact_cnt,
-        |  true AS tracked, true AS est_ge_exact,
-        |  true AS lower_le_exact, true AS err_within_cap
-        |FROM e JOIN n USING (g) WHERE e.exact_cnt * 64 > n.n_events
-        |ORDER BY 1, 2""".stripMargin)),
+      spaceSavingOracle),
 
     // §2.24e4 — SHARDED SpaceSaving (the unbounded-group scale path):
     // items shard by the salted hash mod 4, each shard folds its own
@@ -156,20 +143,7 @@ private[graft] object SketchQueries {
         m = 64, shards = 4),
       // identical published rows: sharding changes the fold's internals,
       // not the guaranteed set or the theorem verdicts
-      sql("""WITH it AS (
-        |  SELECT event_type AS g,
-        |    CASE WHEN user_id % 10 = 0 THEN (user_id % 40) // 10
-        |         ELSE user_id + 100 END AS item
-        |  FROM events),
-        |n AS (SELECT g, CAST(count(*) AS BIGINT) AS n_events
-        |      FROM it GROUP BY 1),
-        |e AS (SELECT g, item, CAST(count(*) AS BIGINT) AS exact_cnt
-        |      FROM it GROUP BY 1, 2)
-        |SELECT e.g AS group_key, e.item, e.exact_cnt,
-        |  true AS tracked, true AS est_ge_exact,
-        |  true AS lower_le_exact, true AS err_within_cap
-        |FROM e JOIN n USING (g) WHERE e.exact_cnt * 64 > n.n_events
-        |ORDER BY 1, 2""".stripMargin)),
+      spaceSavingOracle),
 
     // §2.24e5 — DAY-MERGED SpaceSaving rollup (r12, Agarwal et al.
     // mergeable summaries): one m=128 summary per (group, day) at rest,
@@ -1129,4 +1103,24 @@ private[graft] object SketchQueries {
            |FROM f ORDER BY event_type""".stripMargin
       })
   )
+
+  /** The guaranteed heavy-hitter set replay — q_spacesaving's oracle,
+    * which q_spacesaving_sharded and q_stream_spacesaving share: neither
+    * item sharding nor the staged stream fold changes the guaranteed
+    * set or the theorem verdicts. */
+  private[registry] lazy val spaceSavingOracle: Oracle =
+    sql("""WITH it AS (
+      |  SELECT event_type AS g,
+      |    CASE WHEN user_id % 10 = 0 THEN (user_id % 40) // 10
+      |         ELSE user_id + 100 END AS item
+      |  FROM events),
+      |n AS (SELECT g, CAST(count(*) AS BIGINT) AS n_events
+      |      FROM it GROUP BY 1),
+      |e AS (SELECT g, item, CAST(count(*) AS BIGINT) AS exact_cnt
+      |      FROM it GROUP BY 1, 2)
+      |SELECT e.g AS group_key, e.item, e.exact_cnt,
+      |  true AS tracked, true AS est_ge_exact,
+      |  true AS lower_le_exact, true AS err_within_cap
+      |FROM e JOIN n USING (g) WHERE e.exact_cnt * 64 > n.n_events
+      |ORDER BY 1, 2""".stripMargin)
 }

@@ -73,19 +73,7 @@ private[graft] object StatsQueries {
     Query("q_decay_score", (s, dir) =>
       Analytics.decayScores(Tables.events(s, dir),
         "user_id", "ts", "event_id", "value"),
-      sql("""WITH c AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, cents,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts_us DESC, event_id DESC) AS rn
-        |  FROM c)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_recent,
-        |  CAST(sum(cents * (CAST(1 AS BIGINT) << (16 - rn))) AS BIGINT)
-        |    AS decay_cents
-        |FROM r WHERE rn <= 16 GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      decayScoreOracle),
 
     // §2.59c — zone-map pruning audit: per-tile min/max footer stats +
     // prune verdicts for a one-day ts probe (prunable on time-ordered
@@ -884,28 +872,7 @@ private[graft] object StatsQueries {
       // grid, then the product-limit truncating-integer recurrence
       // replayed duration-by-duration in a recursive CTE (deaths-first
       // at-risk convention on both engines)
-      sql(s"""WITH RECURSIVE e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2),
+      sql(s"""WITH RECURSIVE ${survivalGridCtes(stratified = false)},
         |idx AS (
         |  SELECT arm, t, d, c,
         |    CAST(row_number() OVER (PARTITION BY arm ORDER BY t)
@@ -940,72 +907,16 @@ private[graft] object StatsQueries {
         "purchase", critZ = 1.96),
       // the same grid derivation as q_kaplan_meier, then exact integer
       // risk-set windows + per-death-day quantized hypergeometric terms
-      sql(s"""WITH e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2),
-        |byt AS (
-        |  SELECT t,
-        |    CAST(sum(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS d0,
-        |    CAST(sum(CASE WHEN arm = 0 THEN c ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1,
-        |    CAST(sum(CASE WHEN arm = 1 THEN c ELSE 0 END) AS BIGINT) AS c1
-        |  FROM grid GROUP BY t),
-        |risk AS (
-        |  SELECT t, d0, d1,
-        |    CAST(sum(d0 + c0) OVER ()
-        |      - coalesce(sum(d0 + c0) OVER (ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n0,
-        |    CAST(sum(d1 + c1) OVER ()
-        |      - coalesce(sum(d1 + c1) OVER (ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n1
-        |  FROM byt),
-        |tq AS (
-        |  SELECT d0, d1,
-        |    CAST(floor(CAST(d0 + d1 AS DOUBLE) * CAST(n0 AS DOUBLE)
-        |      / CAST(n0 + n1 AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
-        |      AS e0_micro,
-        |    CASE WHEN n0 + n1 > 1 THEN
-        |      CAST(floor(CAST(d0 + d1 AS DOUBLE)
-        |        * (CAST(n0 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-        |        * (CAST(n1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-        |        * (CAST(n0 + n1 - d0 - d1 AS DOUBLE)
-        |          / CAST(n0 + n1 - 1 AS DOUBLE))
-        |        * 1000000.0 + 0.5) AS BIGINT)
-        |    ELSE CAST(0 AS BIGINT) END AS v_micro
-        |  FROM risk WHERE d0 + d1 > 0 AND n0 + n1 > 0),
+      sql(s"""WITH ${survivalGridCtes(stratified = false)},
+        |${survivalRiskCtes(stratified = false)},
+        |$logRankTermsCte,
         |tot AS (
         |  SELECT CAST(coalesce(sum(CASE WHEN arm = 0 THEN d + c
         |      ELSE 0 END), 0) AS BIGINT) AS n0_total,
         |    CAST(coalesce(sum(CASE WHEN arm = 1 THEN d + c
         |      ELSE 0 END), 0) AS BIGINT) AS n1_total
         |  FROM grid),
-        |agg AS (
-        |  SELECT CAST(coalesce(sum(d0), 0) AS BIGINT) AS o0,
-        |    CAST(coalesce(sum(d1), 0) AS BIGINT) AS o1,
-        |    CAST(coalesce(sum(e0_micro), 0) AS BIGINT) AS e0_micro,
-        |    CAST(coalesce(sum(v_micro), 0) AS BIGINT) AS v_micro
-        |  FROM tq),
+        |$logRankSumsCte,
         |z AS (
         |  SELECT tot.n0_total, tot.n1_total, agg.o0, agg.o1,
         |    agg.e0_micro, agg.v_micro,
@@ -1030,28 +941,7 @@ private[graft] object StatsQueries {
       // the same grid + at-risk windows, then pure-integer hazard
       // increments and one cumulative window — the whole oracle is
       // integer arithmetic
-      sql(s"""WITH e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2),
+      sql(s"""WITH ${survivalGridCtes(stratified = false)},
         |risk AS (
         |  SELECT arm, t, d,
         |    CAST(sum(d + c) OVER (PARTITION BY arm)
@@ -1083,72 +973,12 @@ private[graft] object StatsQueries {
       // the stratified replay: the pu CTE gains the first-event stratum
       // (min over 'day|type' strings — deterministic on both engines),
       // risk windows PARTITION BY stratum, terms summed across strata
-      sql(s"""WITH e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day,
-        |    substr(min(CAST(day AS VARCHAR) || '|' || ty), 12) AS stratum
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT stratum,
-        |    CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT stratum, arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2, 3),
-        |byt AS (
-        |  SELECT stratum, t,
-        |    CAST(sum(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS d0,
-        |    CAST(sum(CASE WHEN arm = 0 THEN c ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1,
-        |    CAST(sum(CASE WHEN arm = 1 THEN c ELSE 0 END) AS BIGINT) AS c1
-        |  FROM grid GROUP BY 1, 2),
-        |risk AS (
-        |  SELECT stratum, t, d0, d1,
-        |    CAST(sum(d0 + c0) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d0 + c0) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n0,
-        |    CAST(sum(d1 + c1) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d1 + c1) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n1
-        |  FROM byt),
-        |tq AS (
-        |  SELECT d0, d1,
-        |    CAST(floor(CAST(d0 + d1 AS DOUBLE) * CAST(n0 AS DOUBLE)
-        |      / CAST(n0 + n1 AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
-        |      AS e0_micro,
-        |    CASE WHEN n0 + n1 > 1 THEN
-        |      CAST(floor(CAST(d0 + d1 AS DOUBLE)
-        |        * (CAST(n0 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-        |        * (CAST(n1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-        |        * (CAST(n0 + n1 - d0 - d1 AS DOUBLE)
-        |          / CAST(n0 + n1 - 1 AS DOUBLE))
-        |        * 1000000.0 + 0.5) AS BIGINT)
-        |    ELSE CAST(0 AS BIGINT) END AS v_micro
-        |  FROM risk WHERE d0 + d1 > 0 AND n0 + n1 > 0),
+      sql(s"""WITH ${survivalGridCtes(stratified = true)},
+        |${survivalRiskCtes(stratified = true)},
+        |$logRankTermsCte,
         |ns AS (SELECT CAST(count(DISTINCT stratum) AS BIGINT) AS n_strata
         |  FROM grid),
-        |agg AS (
-        |  SELECT CAST(coalesce(sum(d0), 0) AS BIGINT) AS o0,
-        |    CAST(coalesce(sum(d1), 0) AS BIGINT) AS o1,
-        |    CAST(coalesce(sum(e0_micro), 0) AS BIGINT) AS e0_micro,
-        |    CAST(coalesce(sum(v_micro), 0) AS BIGINT) AS v_micro
-        |  FROM tq),
+        |$logRankSumsCte,
         |z AS (
         |  SELECT ns.n_strata, agg.o0, agg.o1, agg.e0_micro, agg.v_micro,
         |    CASE WHEN agg.v_micro > 0 THEN
@@ -1172,50 +1002,8 @@ private[graft] object StatsQueries {
       // the stratified grid + risk windows, then the PURE-INTEGER
       // Breslow baseline increments d*1e6 DIV (n0 + 2*n1) and one
       // cumulative window — the whole oracle is integer arithmetic
-      sql(s"""WITH e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day,
-        |    substr(min(CAST(day AS VARCHAR) || '|' || ty), 12) AS stratum
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT stratum,
-        |    CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT stratum, arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2, 3),
-        |byt AS (
-        |  SELECT stratum, t,
-        |    CAST(sum(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS d0,
-        |    CAST(sum(CASE WHEN arm = 0 THEN c ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1,
-        |    CAST(sum(CASE WHEN arm = 1 THEN c ELSE 0 END) AS BIGINT) AS c1
-        |  FROM grid GROUP BY 1, 2),
-        |risk AS (
-        |  SELECT stratum, t, d0 + d1 AS d,
-        |    CAST(sum(d0 + c0) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d0 + c0) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n0,
-        |    CAST(sum(d1 + c1) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d1 + c1) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n1
-        |  FROM byt),
+      sql(s"""WITH ${survivalGridCtes(stratified = true)},
+        |${survivalRiskCtes(stratified = true, "d0 + d1 AS d")},
         |hz2 AS (
         |  SELECT stratum, t, n0, n1, d,
         |    CASE WHEN n0 + 2 * n1 > 0
@@ -1239,50 +1027,8 @@ private[graft] object StatsQueries {
       // ladder; hr_pct/100.0 is an exact double for binary powers, so
       // the whole profile replays transcendental-free; the MLE bracket
       // is one lead() window over the 4-row result
-      sql(s"""WITH e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day,
-        |    substr(min(CAST(day AS VARCHAR) || '|' || ty), 12) AS stratum
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT stratum,
-        |    CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT stratum, arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2, 3),
-        |byt AS (
-        |  SELECT stratum, t,
-        |    CAST(sum(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS d0,
-        |    CAST(sum(CASE WHEN arm = 0 THEN c ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1,
-        |    CAST(sum(CASE WHEN arm = 1 THEN c ELSE 0 END) AS BIGINT) AS c1
-        |  FROM grid GROUP BY 1, 2),
-        |risk AS (
-        |  SELECT stratum, t, d0, d1,
-        |    CAST(sum(d0 + c0) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d0 + c0) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n0,
-        |    CAST(sum(d1 + c1) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d1 + c1) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n1
-        |  FROM byt),
+      sql(s"""WITH ${survivalGridCtes(stratified = true)},
+        |${survivalRiskCtes(stratified = true)},
         |lad(hr_pct) AS (VALUES (CAST(50 AS BIGINT)), (100), (200), (400)),
         |tq AS (
         |  SELECT lad.hr_pct, d0, d1,
@@ -1334,50 +1080,8 @@ private[graft] object StatsQueries {
       // the q_logrank_strat grid + risk CTEs verbatim, with the
       // hypergeometric terms swapped for the Breslow score/information
       // at hr = 2.0 (e^beta exactly 2, no transcendental anywhere)
-      sql(s"""WITH e AS (
-        |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT max(day) AS hz FROM e),
-        |pu AS (
-        |  SELECT u, min(day) AS first_day,
-        |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day,
-        |    substr(min(CAST(day AS VARCHAR) || '|' || ty), 12) AS stratum
-        |  FROM e GROUP BY u),
-        |pa AS (
-        |  SELECT stratum,
-        |    CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
-        |      AS arm,
-        |    conv_day IS NOT NULL AS converted,
-        |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
-        |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
-        |  FROM pu),
-        |grid AS (
-        |  SELECT stratum, arm, t,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS d,
-        |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c
-        |  FROM pa GROUP BY 1, 2, 3),
-        |byt AS (
-        |  SELECT stratum, t,
-        |    CAST(sum(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS d0,
-        |    CAST(sum(CASE WHEN arm = 0 THEN c ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1,
-        |    CAST(sum(CASE WHEN arm = 1 THEN c ELSE 0 END) AS BIGINT) AS c1
-        |  FROM grid GROUP BY 1, 2),
-        |risk AS (
-        |  SELECT stratum, t, d0, d1,
-        |    CAST(sum(d0 + c0) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d0 + c0) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n0,
-        |    CAST(sum(d1 + c1) OVER (PARTITION BY stratum)
-        |      - coalesce(sum(d1 + c1) OVER (PARTITION BY stratum
-        |        ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n1
-        |  FROM byt),
+      sql(s"""WITH ${survivalGridCtes(stratified = true)},
+        |${survivalRiskCtes(stratified = true)},
         |tq AS (
         |  SELECT d0, d1,
         |    CAST(floor((CAST(d1 AS DOUBLE)
@@ -1461,35 +1165,12 @@ private[graft] object StatsQueries {
     // both engines, verdict on the ROUNDED value (engine-identical by
     // construction). On the null split z sits near 0 — the honest
     // no-effect answer; the spec plants a shifted arm for the other path
-    Query("q_mannwhitney", (s, dir) => {
-      import org.apache.spark.sql.graftnative.RollingHash.rollingHash
-      Analytics.mannWhitney(Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("value").isNotNull)
-        .select(
-          (pmod(rollingHash(concat(lit("ab:"),
-            col("user_id").cast("string"))), lit(2)) === 1).as("label"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long")
-            .as("score")))
-    },
+    Query("q_mannwhitney", (s, dir) =>
+      Analytics.mannWhitney(twoArmScores(s, dir)),
       // same histogram rank-sum frame as the nb_auc oracle, tie term in
       // HUGEINT, the z written operation-identically and rounded before
       // the verdict
-      sql(s"""WITH v AS (
-        |  SELECT CAST(${sqlFold("'ab:' || CAST(user_id AS VARCHAR)")} % 2 AS INT) = 1
-        |      AS label,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS score
-        |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
-        |hist AS (
-        |  SELECT score,
-        |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS np,
-        |    CAST(sum(CASE WHEN NOT label THEN 1 ELSE 0 END) AS BIGINT) AS nn
-        |  FROM v GROUP BY score),
-        |cum AS (
-        |  SELECT score, np, nn,
-        |    CAST(coalesce(sum(nn) OVER (ORDER BY score ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cnb
-        |  FROM hist),
+      sql(s"""WITH ${twoArmHistCtes(cdfs = false)},
         |agg AS (
         |  SELECT CAST(coalesce(sum(np), 0) AS BIGINT) AS n_pos,
         |    CAST(coalesce(sum(nn), 0) AS BIGINT) AS n_neg,
@@ -1519,40 +1200,12 @@ private[graft] object StatsQueries {
     // scores — D = max CDF gap as an exact decimal numerator with one
     // micro division, verdict a pure integer compare vs the quantized
     // asymptotic critical value
-    Query("q_ks_test", (s, dir) => {
-      import org.apache.spark.sql.graftnative.RollingHash.rollingHash
-      Analytics.ksTest(Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("value").isNotNull)
-        .select(
-          (pmod(rollingHash(concat(lit("ab:"),
-            col("user_id").cast("string"))), lit(2)) === 1).as("label"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long")
-            .as("score")))
-    },
+    Query("q_ks_test", (s, dir) =>
+      Analytics.ksTest(twoArmScores(s, dir)),
       // the same histogram + cumulative windows; D's numerator is exact
       // HUGEINT, one micro division, and the critical value quantizes
       // to micro once so the verdict is an integer compare
-      sql(s"""WITH v AS (
-        |  SELECT CAST(${sqlFold("'ab:' || CAST(user_id AS VARCHAR)")} % 2 AS INT) = 1
-        |      AS label,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS score
-        |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
-        |hist AS (
-        |  SELECT score,
-        |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS np,
-        |    CAST(sum(CASE WHEN NOT label THEN 1 ELSE 0 END) AS BIGINT) AS nn
-        |  FROM v GROUP BY score),
-        |cum AS (
-        |  SELECT score, np, nn,
-        |    CAST(coalesce(sum(nn) OVER (ORDER BY score ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cnb,
-        |    CAST(coalesce(sum(np) OVER (ORDER BY score ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cnpb,
-        |    CAST(sum(np) OVER () AS BIGINT) AS np_tot,
-        |    CAST(sum(nn) OVER () AS BIGINT) AS nn_tot
-        |  FROM hist),
+      sql(s"""WITH ${twoArmHistCtes(cdfs = true)},
         |agg AS (
         |  SELECT max(np_tot) AS n_pos, max(nn_tot) AS n_neg,
         |    CAST(count(*) AS BIGINT) AS n_scores,
@@ -1584,41 +1237,13 @@ private[graft] object StatsQueries {
     // cents scores — every CDF gap integrated with the 1/(F(1−F))
     // weight, each term an exact-integer floor, verdict vs the
     // asymptotic 2.492 quantized once to micro
-    Query("q_ad_test", (s, dir) => {
-      import org.apache.spark.sql.graftnative.RollingHash.rollingHash
-      Analytics.adTest(Tables.events(s, dir)
-        .where(col("user_id").isNotNull && col("value").isNotNull)
-        .select(
-          (pmod(rollingHash(concat(lit("ab:"),
-            col("user_id").cast("string"))), lit(2)) === 1).as("label"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long")
-            .as("score")))
-    },
+    Query("q_ad_test", (s, dir) =>
+      Analytics.adTest(twoArmScores(s, dir)),
       // same histogram + cumulative windows as q_ks_test; every AD term
       // is an exact HUGEINT floor (numerator a square — non-negative, so
       // DuckDB's flooring // and Spark's truncating DIV agree), summed
       // order-independently
-      sql(s"""WITH v AS (
-        |  SELECT CAST(${sqlFold("'ab:' || CAST(user_id AS VARCHAR)")} % 2 AS INT) = 1
-        |      AS label,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS score
-        |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
-        |hist AS (
-        |  SELECT score,
-        |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS np,
-        |    CAST(sum(CASE WHEN NOT label THEN 1 ELSE 0 END) AS BIGINT) AS nn
-        |  FROM v GROUP BY score),
-        |cum AS (
-        |  SELECT score, np, nn,
-        |    CAST(coalesce(sum(nn) OVER (ORDER BY score ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cnb,
-        |    CAST(coalesce(sum(np) OVER (ORDER BY score ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cnpb,
-        |    CAST(sum(np) OVER () AS BIGINT) AS np_tot,
-        |    CAST(sum(nn) OVER () AS BIGINT) AS nn_tot
-        |  FROM hist),
+      sql(s"""WITH ${twoArmHistCtes(cdfs = true)},
         |terms AS (
         |  SELECT np_tot, nn_tot,
         |    CASE WHEN cnb + cnpb + np + nn < np_tot + nn_tot
@@ -2011,28 +1636,7 @@ private[graft] object StatsQueries {
       Observability.lastTouchAttribution(Tables.events(s, dir),
         purchaseType = "purchase", touchTypes = Seq("click", "view"),
         windowUs = 86400000000L),
-      sql("""WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_c
-        |  FROM events WHERE event_type IN ('purchase', 'click', 'view')),
-        |marked AS (SELECT *,
-        |    last_value(CASE WHEN event_type IN ('click', 'view') THEN us END
-        |      IGNORE NULLS) OVER w AS t_us,
-        |    last_value(CASE WHEN event_type IN ('click', 'view')
-        |      THEN event_type END IGNORE NULLS) OVER w AS t_type
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |p AS (SELECT
-        |    CASE WHEN t_us IS NOT NULL AND us - t_us <= 86400000000
-        |         THEN t_type ELSE 'none' END AS attributed_type,
-        |    v_c,
-        |    CASE WHEN t_us IS NOT NULL AND us - t_us <= 86400000000
-        |         THEN us - t_us END AS lag_us
-        |  FROM marked WHERE event_type = 'purchase')
-        |SELECT attributed_type, CAST(count(*) AS BIGINT) AS n_purchases,
-        |  CAST(sum(v_c) AS BIGINT) AS revenue_cents,
-        |  avg(lag_us) AS mean_lag_us
-        |FROM p GROUP BY attributed_type""".stripMargin)),
+      attributionOracle),
 
     // §2.65d — audience-overlap matrix: distinct-user Jaccard per event-
     // type pair from each user's bounded type list — the |users|² self-
@@ -2123,33 +1727,7 @@ private[graft] object StatsQueries {
         "ts", "value"),
       // per-(type, day) TV vs the nine literals, pure integer with the
       // absent-digit complement identity; one truncating DIV 2 publish
-      sql("""WITH b(digit, bm) AS (VALUES
-        |  (CAST(1 AS BIGINT), CAST(301030 AS BIGINT)),
-        |  (2, 176091), (3, 124939), (4, 96910), (5, 79181),
-        |  (6, 66947), (7, 57992), (8, 51153), (9, 45757)),
-        |cells AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST(substring(CAST(CAST(floor(value) AS BIGINT) AS VARCHAR),
-        |      1, 1) AS BIGINT) AS digit,
-        |    CAST(count(*) AS BIGINT) AS n_d
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |    AND value IS NOT NULL AND value >= 1
-        |  GROUP BY 1, 2, 3),
-        |byday AS (
-        |  SELECT g, day, CAST(sum(n_d) AS BIGINT) AS n
-        |  FROM cells GROUP BY 1, 2),
-        |dev AS (
-        |  SELECT c.g, c.day, d.n,
-        |    CAST(sum(abs((c.n_d * 1000000) // d.n - b.bm)) AS BIGINT)
-        |      AS present_dev,
-        |    CAST(sum(b.bm) AS BIGINT) AS present_b
-        |  FROM cells c JOIN b ON c.digit = b.digit
-        |  JOIN byday d ON c.g = d.g AND c.day = d.day
-        |  GROUP BY 1, 2, 3)
-        |SELECT g AS group_key, CAST(day AS VARCHAR) AS day, n,
-        |  (present_dev + (1000000 - present_b)) // 2 AS tv_micro
-        |FROM dev ORDER BY group_key, day""".stripMargin)),
+      benfordTimelineOracle),
 
     // §2.63d — dow anomaly bands (r16): each day judged against its
     // OWN dow panel's mean ± 2σ with the whole gate pure integer —
@@ -2159,11 +1737,7 @@ private[graft] object StatsQueries {
         "ts"),
       // the pure-integer variance gate replayed with the same exact
       // HUGEINT squares on both sides of the inequality
-      sql("""WITH daily AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("g")},
         |d2 AS (
         |  SELECT g, day, y, CAST(dayofweek(day) AS BIGINT) AS dow
         |  FROM daily),
@@ -2190,11 +1764,7 @@ private[graft] object StatsQueries {
         "ts"),
       // row lags + exact integer micro means over the shared scored-day
       // set; the winner is an integer compare, no float anywhere
-      sql("""WITH daily AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("g")},
         |lagged AS (
         |  SELECT g, day, y,
         |    lag(y, 1) OVER (PARTITION BY g ORDER BY day) AS y1,
@@ -2230,43 +1800,7 @@ private[graft] object StatsQueries {
       // centered 7-row trend window, dow panel means, and the panel-wide
       // centering all replay as window functions; negative integer
       // divisions split into magnitude DIV + re-sign on BOTH engines
-      sql("""WITH daily AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
-        |t AS (
-        |  SELECT g, day, y,
-        |    CAST(sum(y) OVER w7 AS BIGINT) AS tsum,
-        |    CAST(count(*) OVER w7 AS BIGINT) AS tcnt
-        |  FROM daily WINDOW w7 AS (PARTITION BY g ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |t2 AS (
-        |  SELECT g, day, y, (tsum * 1000000) // tcnt AS trend_micro,
-        |    CAST(dayofweek(day) AS BIGINT) AS dow,
-        |    y * 1000000 - (tsum * 1000000) // tcnt AS det_micro
-        |  FROM t),
-        |s AS (
-        |  SELECT g, day, y, dow, trend_micro, det_micro,
-        |    CAST(sum(det_micro) OVER (PARTITION BY g, dow) AS BIGINT)
-        |      AS dsum,
-        |    CAST(count(*) OVER (PARTITION BY g, dow) AS BIGINT) AS dcnt
-        |  FROM t2),
-        |s2 AS (
-        |  SELECT g, day, y, dow, trend_micro,
-        |    CAST(CASE WHEN dsum >= 0 THEN dsum // dcnt
-        |      ELSE -((-dsum) // dcnt) END AS BIGINT) AS s_raw
-        |  FROM s),
-        |s3 AS (
-        |  SELECT g, day, y, dow, trend_micro, s_raw,
-        |    CAST(sum(s_raw) OVER (PARTITION BY g) AS BIGINT) AS smn,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS smd
-        |  FROM s2),
-        |s4 AS (
-        |  SELECT g, day, y, dow, trend_micro,
-        |    s_raw - CAST(CASE WHEN smn >= 0 THEN smn // smd
-        |      ELSE -((-smn) // smd) END AS BIGINT) AS seasonal_micro
-        |  FROM s3)
+      sql(s"""WITH ${stlCtes(withDow = true)}
         |SELECT g AS group_key, CAST(day AS VARCHAR) AS day, y, dow,
         |  trend_micro, seasonal_micro,
         |  y * 1000000 - trend_micro - seasonal_micro AS remainder_micro
@@ -2282,43 +1816,7 @@ private[graft] object StatsQueries {
         "ts"),
       // the full decomposition replayed, then n-scaled HUGEINT variances
       // and the integer-compare clamp before the single division
-      sql("""WITH daily AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
-        |t AS (
-        |  SELECT g, day, y,
-        |    CAST(sum(y) OVER w7 AS BIGINT) AS tsum,
-        |    CAST(count(*) OVER w7 AS BIGINT) AS tcnt
-        |  FROM daily WINDOW w7 AS (PARTITION BY g ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |t2 AS (
-        |  SELECT g, day, y, (tsum * 1000000) // tcnt AS trend_micro,
-        |    CAST(dayofweek(day) AS BIGINT) AS dow,
-        |    y * 1000000 - (tsum * 1000000) // tcnt AS det_micro
-        |  FROM t),
-        |s AS (
-        |  SELECT g, day, y, dow, trend_micro, det_micro,
-        |    CAST(sum(det_micro) OVER (PARTITION BY g, dow) AS BIGINT)
-        |      AS dsum,
-        |    CAST(count(*) OVER (PARTITION BY g, dow) AS BIGINT) AS dcnt
-        |  FROM t2),
-        |s2 AS (
-        |  SELECT g, day, y, dow, trend_micro,
-        |    CAST(CASE WHEN dsum >= 0 THEN dsum // dcnt
-        |      ELSE -((-dsum) // dcnt) END AS BIGINT) AS s_raw
-        |  FROM s),
-        |s3 AS (
-        |  SELECT g, day, y, dow, trend_micro, s_raw,
-        |    CAST(sum(s_raw) OVER (PARTITION BY g) AS BIGINT) AS smn,
-        |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS smd
-        |  FROM s2),
-        |s4 AS (
-        |  SELECT g, day, y, trend_micro,
-        |    s_raw - CAST(CASE WHEN smn >= 0 THEN smn // smd
-        |      ELSE -((-smn) // smd) END AS BIGINT) AS seasonal_micro
-        |  FROM s3),
+      sql(s"""WITH ${stlCtes(withDow = false)},
         |comp AS (
         |  SELECT g,
         |    CAST(y * 1000000 - trend_micro - seasonal_micro AS HUGEINT)
@@ -2361,11 +1859,7 @@ private[graft] object StatsQueries {
       // pure-integer S and 18*Var with the tie correction, the
       // continuity-corrected z through one double chain, and the lower
       // median of the micro-quantized pairwise slopes by row position
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t")},
         |n AS (SELECT t, CAST(count(*) AS BIGINT) AS n_days
         |  FROM daily GROUP BY t),
         |ties AS (
@@ -2642,11 +2136,7 @@ private[graft] object StatsQueries {
     Query("q_fano", (s, dir) =>
       Analytics.fanoDaily(Tables.events(s, dir), "event_type", "ts"),
       // HUGEINT moments, one non-negative DIV, banded integer verdict
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t")},
         |agg AS (
         |  SELECT t AS group_key, CAST(count(*) AS BIGINT) AS n_days,
         |    CAST(sum(y) AS HUGEINT) AS s,
@@ -2746,11 +2236,7 @@ private[graft] object StatsQueries {
       // lower median by rank position, lag() run boundaries, the integer
       // numerator and one double chain replayed; ties sit BELOW by the
       // documented > med convention
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t")},
         |n AS (SELECT t, CAST(count(*) AS BIGINT) AS n_days FROM daily
         |  GROUP BY t),
         |med AS (
@@ -2800,11 +2286,7 @@ private[graft] object StatsQueries {
         "ts", lags = Seq(1, 7)),
       // HUGEINT centered products; per-lag linear lag() windows, NULL
       // num when the series is shorter than the lag, one double quotient
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t")},
         |base AS (
         |  SELECT t,
         |    CAST(row_number() OVER (PARTITION BY t ORDER BY day)
@@ -2849,13 +2331,7 @@ private[graft] object StatsQueries {
         "ts", "value"),
       // 2x midranks (2*rank + tiecount - 1) replay exactly; the
       // certificates are integer and rho is the one shared double chain
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS ya,
-        |    CAST(coalesce(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
-        |      AS BIGINT)), 0) AS BIGINT) AS yb
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t", countAndCents)},
         |ranked AS (
         |  SELECT t,
         |    CAST(rank() OVER (PARTITION BY t ORDER BY ya) AS BIGINT) * 2
@@ -2893,13 +2369,7 @@ private[graft] object StatsQueries {
         "ts", "value"),
       // S and the tie terms are pure integer; tau is the one shared
       // double chain, NULL when either series is all-tied
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS ya,
-        |    CAST(coalesce(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
-        |      AS BIGINT)), 0) AS BIGINT) AS yb
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t", countAndCents)},
         |pairs AS (
         |  SELECT a.t AS t,
         |    CAST(CASE WHEN b.ya > a.ya THEN 1 WHEN b.ya < a.ya THEN -1
@@ -2938,11 +2408,7 @@ private[graft] object StatsQueries {
       // same daily panel; both medians replay as rank statistics
       // (position (m+1)//2 under value ASC), the slope quantization is
       // the one shared double chain, everything else exact integer
-      sql("""WITH daily AS (
-        |  SELECT event_type AS t, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
+      sql(s"""WITH ${dailyCte("t")},
         |base AS (
         |  SELECT t, min(day) AS day0, max(day) AS day_last,
         |    CAST(count(*) AS BIGINT) AS n_days
@@ -3194,4 +2660,279 @@ private[graft] object StatsQueries {
         |FROM cents c JOIN cuts USING (event_type)
         |GROUP BY 1""".stripMargin))
   )
+
+  /** The log-rank terms over [[survivalRiskCtes]]: per death time the
+    * hypergeometric E/V terms, micro-quantized. Ends with `tq`. */
+  private def logRankTermsCte: String =
+    """tq AS (
+      |  SELECT d0, d1,
+      |    CAST(floor(CAST(d0 + d1 AS DOUBLE) * CAST(n0 AS DOUBLE)
+      |      / CAST(n0 + n1 AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
+      |      AS e0_micro,
+      |    CASE WHEN n0 + n1 > 1 THEN
+      |      CAST(floor(CAST(d0 + d1 AS DOUBLE)
+      |        * (CAST(n0 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
+      |        * (CAST(n1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
+      |        * (CAST(n0 + n1 - d0 - d1 AS DOUBLE)
+      |          / CAST(n0 + n1 - 1 AS DOUBLE))
+      |        * 1000000.0 + 0.5) AS BIGINT)
+      |    ELSE CAST(0 AS BIGINT) END AS v_micro
+      |  FROM risk WHERE d0 + d1 > 0 AND n0 + n1 > 0)""".stripMargin
+
+  /** The observed deaths and quantized E/V of [[logRankTermsCte]] summed
+    * over every risk set. Ends with `agg`. */
+  private def logRankSumsCte: String =
+    """agg AS (
+      |  SELECT CAST(coalesce(sum(d0), 0) AS BIGINT) AS o0,
+      |    CAST(coalesce(sum(d1), 0) AS BIGINT) AS o1,
+      |    CAST(coalesce(sum(e0_micro), 0) AS BIGINT) AS e0_micro,
+      |    CAST(coalesce(sum(v_micro), 0) AS BIGINT) AS v_micro
+      |  FROM tq)""".stripMargin
+
+  /** The (label, score) input of the two-arm rank and CDF tests: the
+    * salted 'ab:' user split as `label` and the value in cents as
+    * `score`, over events with a user and a value. */
+  private def twoArmScores(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.graftnative.RollingHash.rollingHash
+    Tables.events(s, dir)
+      .where(col("user_id").isNotNull && col("value").isNotNull)
+      .select(
+        (pmod(rollingHash(concat(lit("ab:"),
+          col("user_id").cast("string"))), lit(2)) === 1).as("label"),
+        (col("value").cast("decimal(18,2)") * 100).cast("long")
+          .as("score"))
+  }
+
+  /** The survival family's duration grid, replaying
+    * Analytics.kmStratumGrid: each user's entry and first conversion day,
+    * censoring at the corpus horizon, the salted 'km:' arm fold, and the
+    * death/censoring counts per (arm, t) — per (stratum, arm, t) when
+    * `stratified`, the stratum being the user's first event type. Ends
+    * with `grid`. */
+  private def survivalGridCtes(stratified: Boolean): String = {
+    val (stratum, key, groupBy) =
+      if (stratified) (",\n    substr(min(CAST(day AS VARCHAR) || '|' || ty), 12) AS stratum",
+        "stratum, ", "1, 2, 3")
+      else ("", "", "1, 2")
+    s"""e AS (
+       |  SELECT user_id AS u, CAST(ts AS DATE) AS day, event_type AS ty
+       |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+       |h AS (SELECT max(day) AS hz FROM e),
+       |pu AS (
+       |  SELECT u, min(day) AS first_day,
+       |    min(CASE WHEN ty = 'purchase' THEN day END) AS conv_day$stratum
+       |  FROM e GROUP BY u),
+       |pa AS (
+       |  SELECT ${key}CAST(${sqlFold("'km:' || CAST(u AS VARCHAR)")} % 2 AS BIGINT)
+       |      AS arm,
+       |    conv_day IS NOT NULL AS converted,
+       |    CAST(CASE WHEN conv_day IS NOT NULL THEN conv_day - first_day
+       |      ELSE (SELECT hz FROM h) - first_day END AS BIGINT) AS t
+       |  FROM pu),
+       |grid AS (
+       |  SELECT ${key}arm, t,
+       |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
+       |      AS d,
+       |    CAST(sum(CASE WHEN NOT converted THEN 1 ELSE 0 END) AS BIGINT)
+       |      AS c
+       |  FROM pa GROUP BY $groupBy)""".stripMargin
+  }
+
+  /** The two-arm risk set over [[survivalGridCtes]], replaying
+    * Analytics.survivalRiskSet: deaths and censorings per t (per
+    * (stratum, t) when `stratified`) split by arm, and each arm's exact
+    * at-risk count n0/n1 before t. `risk` carries the key, t, `deaths`
+    * and n0/n1. Ends with `risk`. */
+  private def survivalRiskCtes(stratified: Boolean,
+      deaths: String = "d0, d1"): String = {
+    val (key, groupBy, part) =
+      if (stratified) ("stratum, ", "1, 2", "PARTITION BY stratum")
+      else ("", "t", "")
+    def atRisk(n: String, a: Int) =
+      s"""CAST(sum(d$a + c$a) OVER ($part)
+         |      - coalesce(sum(d$a + c$a) OVER (${if (part.isEmpty) "" else s"$part "}ORDER BY t
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS BIGINT) AS $n""".stripMargin
+    s"""byt AS (
+       |  SELECT ${key}t,
+       |    CAST(sum(CASE WHEN arm = 0 THEN d ELSE 0 END) AS BIGINT) AS d0,
+       |    CAST(sum(CASE WHEN arm = 0 THEN c ELSE 0 END) AS BIGINT) AS c0,
+       |    CAST(sum(CASE WHEN arm = 1 THEN d ELSE 0 END) AS BIGINT) AS d1,
+       |    CAST(sum(CASE WHEN arm = 1 THEN c ELSE 0 END) AS BIGINT) AS c1
+       |  FROM grid GROUP BY $groupBy),
+       |risk AS (
+       |  SELECT ${key}t, $deaths,
+       |    ${atRisk("n0", 0)},
+       |    ${atRisk("n1", 1)}
+       |  FROM byt)""".stripMargin
+  }
+
+  /** The (key, day) panel of `events` per event type, keyed as `key`,
+    * replaying Analytics.dailyPanel: rows with a null type or time
+    * dropped, one row per present day with its count `y` — or with
+    * `ys` in its place. */
+  private def dailyCte(key: String,
+      ys: String = "CAST(count(*) AS BIGINT) AS y"): String =
+    s"""daily AS (
+       |  SELECT event_type AS $key, CAST(ts AS DATE) AS day,
+       |    $ys
+       |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** [[dailyCte]]'s two series for the rank correlations: the count
+    * `ya` and the cents sum `yb`. */
+  private def countAndCents: String =
+    """CAST(count(*) AS BIGINT) AS ya,
+      |    CAST(coalesce(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
+      |      AS BIGINT)), 0) AS BIGINT) AS yb""".stripMargin
+
+  /** The additive decomposition of each type's daily series that
+    * q_stl_decompose publishes and q_seasonal_strength scores: the
+    * centered 7-row trend, the centered day-of-week seasonal, all
+    * integer micro with negative divisions split into magnitude DIV and
+    * re-sign. Ends with `s4(g, day, y, [dow,] trend_micro,
+    * seasonal_micro)`. */
+  private def stlCtes(withDow: Boolean): String =
+    s"""${dailyCte("g")},
+       |t AS (
+       |  SELECT g, day, y,
+       |    CAST(sum(y) OVER w7 AS BIGINT) AS tsum,
+       |    CAST(count(*) OVER w7 AS BIGINT) AS tcnt
+       |  FROM daily WINDOW w7 AS (PARTITION BY g ORDER BY day
+       |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+       |t2 AS (
+       |  SELECT g, day, y, (tsum * 1000000) // tcnt AS trend_micro,
+       |    CAST(dayofweek(day) AS BIGINT) AS dow,
+       |    y * 1000000 - (tsum * 1000000) // tcnt AS det_micro
+       |  FROM t),
+       |s AS (
+       |  SELECT g, day, y, dow, trend_micro, det_micro,
+       |    CAST(sum(det_micro) OVER (PARTITION BY g, dow) AS BIGINT)
+       |      AS dsum,
+       |    CAST(count(*) OVER (PARTITION BY g, dow) AS BIGINT) AS dcnt
+       |  FROM t2),
+       |s2 AS (
+       |  SELECT g, day, y, dow, trend_micro,
+       |    CAST(CASE WHEN dsum >= 0 THEN dsum // dcnt
+       |      ELSE -((-dsum) // dcnt) END AS BIGINT) AS s_raw
+       |  FROM s),
+       |s3 AS (
+       |  SELECT g, day, y, dow, trend_micro, s_raw,
+       |    CAST(sum(s_raw) OVER (PARTITION BY g) AS BIGINT) AS smn,
+       |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS smd
+       |  FROM s2),
+       |s4 AS (
+       |  SELECT g, day, y, ${if (withDow) "dow, " else ""}trend_micro,
+       |    s_raw - CAST(CASE WHEN smn >= 0 THEN smn // smd
+       |      ELSE -((-smn) // smd) END AS BIGINT) AS seasonal_micro
+       |  FROM s3)""".stripMargin
+
+  /** The two-arm score histogram the rank and CDF tests share: the
+    * salted 'ab:' user split as `label`, the value in cents as `score`,
+    * per-score arm counts np/nn, and `cum` with the strictly-below
+    * negative count cnb — plus, with `cdfs`, the strictly-below positive
+    * count cnpb and the arm totals np_tot/nn_tot. Ends with `cum`. */
+  private def twoArmHistCtes(cdfs: Boolean): String = {
+    val cdfCols =
+      if (!cdfs) ""
+      else """,
+        |    CAST(coalesce(sum(np) OVER (ORDER BY score ASC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS cnpb,
+        |    CAST(sum(np) OVER () AS BIGINT) AS np_tot,
+        |    CAST(sum(nn) OVER () AS BIGINT) AS nn_tot""".stripMargin
+    s"""v AS (
+       |  SELECT CAST(${sqlFold("'ab:' || CAST(user_id AS VARCHAR)")} % 2 AS INT) = 1
+       |      AS label,
+       |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS score
+       |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
+       |hist AS (
+       |  SELECT score,
+       |    CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS np,
+       |    CAST(sum(CASE WHEN NOT label THEN 1 ELSE 0 END) AS BIGINT) AS nn
+       |  FROM v GROUP BY score),
+       |cum AS (
+       |  SELECT score, np, nn,
+       |    CAST(coalesce(sum(nn) OVER (ORDER BY score ASC
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS BIGINT) AS cnb$cdfCols
+       |  FROM hist)""".stripMargin
+  }
+
+  /** The per-user newest-16 decayed-cents replay — q_decay_score's
+    * oracle, which q_stream_decay shares: top-n is merge-idempotent, so
+    * the streamed buffer's final score is the batch operator's. */
+  private[registry] lazy val decayScoreOracle: Oracle =
+    sql("""WITH c AS (
+      |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
+      |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |  FROM events),
+      |r AS (
+      |  SELECT user_id, cents,
+      |    row_number() OVER (PARTITION BY user_id
+      |      ORDER BY ts_us DESC, event_id DESC) AS rn
+      |  FROM c)
+      |SELECT user_id, CAST(count(*) AS BIGINT) AS n_recent,
+      |  CAST(sum(cents * (CAST(1 AS BIGINT) << (16 - rn))) AS BIGINT)
+      |    AS decay_cents
+      |FROM r WHERE rn <= 16 GROUP BY user_id ORDER BY user_id""".stripMargin)
+
+  /** The last-touch credit replay — q_attribution's oracle, which
+    * q_stream_attribution shares: the stream applies the same
+    * per-purchase decision rule in the same (us, event_id) order. */
+  private[registry] lazy val attributionOracle: Oracle =
+    sql("""WITH e AS (SELECT user_id, event_id, event_type,
+      |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+      |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_c
+      |  FROM events WHERE event_type IN ('purchase', 'click', 'view')),
+      |marked AS (SELECT *,
+      |    last_value(CASE WHEN event_type IN ('click', 'view') THEN us END
+      |      IGNORE NULLS) OVER w AS t_us,
+      |    last_value(CASE WHEN event_type IN ('click', 'view')
+      |      THEN event_type END IGNORE NULLS) OVER w AS t_type
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+      |p AS (SELECT
+      |    CASE WHEN t_us IS NOT NULL AND us - t_us <= 86400000000
+      |         THEN t_type ELSE 'none' END AS attributed_type,
+      |    v_c,
+      |    CASE WHEN t_us IS NOT NULL AND us - t_us <= 86400000000
+      |         THEN us - t_us END AS lag_us
+      |  FROM marked WHERE event_type = 'purchase')
+      |SELECT attributed_type, CAST(count(*) AS BIGINT) AS n_purchases,
+      |  CAST(sum(v_c) AS BIGINT) AS revenue_cents,
+      |  avg(lag_us) AS mean_lag_us
+      |FROM p GROUP BY attributed_type""".stripMargin)
+
+  /** The per-(type, day) Benford TV replay — q_benford_timeline's
+    * oracle, which q_stream_benford shares: its additive cell counters
+    * are a pure function of the row multiset. */
+  private[registry] lazy val benfordTimelineOracle: Oracle =
+    sql("""WITH b(digit, bm) AS (VALUES
+      |  (CAST(1 AS BIGINT), CAST(301030 AS BIGINT)),
+      |  (2, 176091), (3, 124939), (4, 96910), (5, 79181),
+      |  (6, 66947), (7, 57992), (8, 51153), (9, 45757)),
+      |cells AS (
+      |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
+      |    CAST(substring(CAST(CAST(floor(value) AS BIGINT) AS VARCHAR),
+      |      1, 1) AS BIGINT) AS digit,
+      |    CAST(count(*) AS BIGINT) AS n_d
+      |  FROM events
+      |  WHERE event_type IS NOT NULL AND ts IS NOT NULL
+      |    AND value IS NOT NULL AND value >= 1
+      |  GROUP BY 1, 2, 3),
+      |byday AS (
+      |  SELECT g, day, CAST(sum(n_d) AS BIGINT) AS n
+      |  FROM cells GROUP BY 1, 2),
+      |dev AS (
+      |  SELECT c.g, c.day, d.n,
+      |    CAST(sum(abs((c.n_d * 1000000) // d.n - b.bm)) AS BIGINT)
+      |      AS present_dev,
+      |    CAST(sum(b.bm) AS BIGINT) AS present_b
+      |  FROM cells c JOIN b ON c.digit = b.digit
+      |  JOIN byday d ON c.g = d.g AND c.day = d.day
+      |  GROUP BY 1, 2, 3)
+      |SELECT g AS group_key, CAST(day AS VARCHAR) AS day, n,
+      |  (present_dev + (1000000 - present_b)) // 2 AS tv_micro
+      |FROM dev ORDER BY group_key, day""".stripMargin)
 }

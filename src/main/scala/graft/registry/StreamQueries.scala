@@ -428,20 +428,7 @@ private[graft] object StreamQueries {
       // arrival order, so the final counters ARE the batch summary and
       // the batch oracle certifies the stream verbatim (the
       // stream-sketch promotion contract)
-      sql("""WITH it AS (
-        |  SELECT event_type AS g,
-        |    CASE WHEN user_id % 10 = 0 THEN (user_id % 40) // 10
-        |         ELSE user_id + 100 END AS item
-        |  FROM events),
-        |n AS (SELECT g, CAST(count(*) AS BIGINT) AS n_events
-        |      FROM it GROUP BY 1),
-        |e AS (SELECT g, item, CAST(count(*) AS BIGINT) AS exact_cnt
-        |      FROM it GROUP BY 1, 2)
-        |SELECT e.g AS group_key, e.item, e.exact_cnt,
-        |  true AS tracked, true AS est_ge_exact,
-        |  true AS lower_le_exact, true AS err_within_cap
-        |FROM e JOIN n USING (g) WHERE e.exact_cnt * 64 > n.n_events
-        |ORDER BY 1, 2""".stripMargin)),
+      SketchQueries.spaceSavingOracle),
 
     // §2.45i promoted to a oracle-checked row (r16 — the real-time
     // FEATURE-STORE twin graduates: last-touch attribution is the
@@ -482,28 +469,7 @@ private[graft] object StreamQueries {
       // the streaming fold shares the batch per-purchase decision rule
       // and the ts-split staging preserves the (us, event_id) order, so
       // the batch replay certifies the streamed credits verbatim
-      sql("""WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_c
-        |  FROM events WHERE event_type IN ('purchase', 'click', 'view')),
-        |marked AS (SELECT *,
-        |    last_value(CASE WHEN event_type IN ('click', 'view') THEN us END
-        |      IGNORE NULLS) OVER w AS t_us,
-        |    last_value(CASE WHEN event_type IN ('click', 'view')
-        |      THEN event_type END IGNORE NULLS) OVER w AS t_type
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |p AS (SELECT
-        |    CASE WHEN t_us IS NOT NULL AND us - t_us <= 86400000000
-        |         THEN t_type ELSE 'none' END AS attributed_type,
-        |    v_c,
-        |    CASE WHEN t_us IS NOT NULL AND us - t_us <= 86400000000
-        |         THEN us - t_us END AS lag_us
-        |  FROM marked WHERE event_type = 'purchase')
-        |SELECT attributed_type, CAST(count(*) AS BIGINT) AS n_purchases,
-        |  CAST(sum(v_c) AS BIGINT) AS revenue_cents,
-        |  avg(lag_us) AS mean_lag_us
-        |FROM p GROUP BY attributed_type""".stripMargin)),
+      StatsQueries.attributionOracle),
 
     // §2.45k promoted to a oracle-checked row (r16 — the recency
     // feature store joins attribution in the graduated set): each
@@ -535,19 +501,7 @@ private[graft] object StreamQueries {
       // the streamed newest-16 buffer folds under the batch (ts, id)
       // order and top-n is merge-idempotent, so the final per-user score
       // IS the batch operator's — the batch replay certifies the stream
-      sql("""WITH c AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, cents,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts_us DESC, event_id DESC) AS rn
-        |  FROM c)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_recent,
-        |  CAST(sum(cents * (CAST(1 AS BIGINT) << (16 - rn))) AS BIGINT)
-        |    AS decay_cents
-        |FROM r WHERE rn <= 16 GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      StatsQueries.decayScoreOracle),
 
     // §2.45o promoted to a oracle-checked row (r16 — the continuously
     // maintained eval-set draw): per source the k smallest salted-hash
@@ -580,15 +534,7 @@ private[graft] object StreamQueries {
       // bottom-k of a set re-derives from the streamed emission log, and
       // the ord hash is the same salted base-257 fold on both engines —
       // the batch replay certifies the streamed sample verbatim
-      sql(s"""WITH h AS (
-        |  SELECT doc_id, source,
-        |    ${sqlFold("'gsample:' || CAST(doc_id AS VARCHAR)")} AS ord
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, source,
-        |    CAST(row_number() OVER (PARTITION BY source ORDER BY ord, doc_id) AS BIGINT) AS rank
-        |  FROM h)
-        |SELECT doc_id, source, rank FROM r WHERE rank <= 5""".stripMargin)),
+      TextQueries.groupSampleOracle),
 
     // §2.45s — streaming KMV register row (r16 — the LAST sketch gets
     // its stream twin; the sketch class is now closed: HLL, CMS,
@@ -692,33 +638,7 @@ private[graft] object StreamQueries {
       // the streaming twin replays the BATCH timeline: additive cell
       // counters are a pure function of the row multiset, so the staged
       // two-batch drain must equal the one-shot SQL exactly
-      sql("""WITH b(digit, bm) AS (VALUES
-        |  (CAST(1 AS BIGINT), CAST(301030 AS BIGINT)),
-        |  (2, 176091), (3, 124939), (4, 96910), (5, 79181),
-        |  (6, 66947), (7, 57992), (8, 51153), (9, 45757)),
-        |cells AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST(substring(CAST(CAST(floor(value) AS BIGINT) AS VARCHAR),
-        |      1, 1) AS BIGINT) AS digit,
-        |    CAST(count(*) AS BIGINT) AS n_d
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |    AND value IS NOT NULL AND value >= 1
-        |  GROUP BY 1, 2, 3),
-        |byday AS (
-        |  SELECT g, day, CAST(sum(n_d) AS BIGINT) AS n
-        |  FROM cells GROUP BY 1, 2),
-        |dev AS (
-        |  SELECT c.g, c.day, d.n,
-        |    CAST(sum(abs((c.n_d * 1000000) // d.n - b.bm)) AS BIGINT)
-        |      AS present_dev,
-        |    CAST(sum(b.bm) AS BIGINT) AS present_b
-        |  FROM cells c JOIN b ON c.digit = b.digit
-        |  JOIN byday d ON c.g = d.g AND c.day = d.day
-        |  GROUP BY 1, 2, 3)
-        |SELECT g AS group_key, CAST(day AS VARCHAR) AS day, n,
-        |  (present_dev + (1000000 - present_b)) // 2 AS tv_micro
-        |FROM dev ORDER BY group_key, day""".stripMargin)),
+      StatsQueries.benfordTimelineOracle),
 
     Query("q_stream_ohlc", (s, dir) => {
       val ev = Tables.events(s, dir)

@@ -171,7 +171,7 @@ private[graft] object TextQueries {
           .select(col("doc_a"), col("doc_b"))),
       // connected components as a recursive reachability closure: cluster_id
       // of a node = min node id reachable in the undirected pair graph
-      sql(dupClustersClosureSql)),
+      dupClustersOracle),
 
     // §2.18c — the same components via star-contraction (large-star/
     // small-star, Kiveris et al. SoCC'14): O(log n) BSP rounds instead of
@@ -186,7 +186,7 @@ private[graft] object TextQueries {
       // star-contraction computes the SAME components — one closure oracle
       // certifies both algorithms, and their mutual hash match proves the
       // two fixpoints agree on real pair graphs
-      sql(dupClustersClosureSql)),
+      dupClustersOracle),
 
     // §2.18h — near-dup cluster-size histogram: duplication mass by
     // cluster size (mostly-2 organic duplication vs the heavy tail of a
@@ -1533,15 +1533,7 @@ private[graft] object TextQueries {
     Query("q_group_sample", (s, dir) =>
       graft.operators.Sampling.groupSample(
         Tables.documents(s, dir), "source", k = 5),
-      sql(s"""WITH h AS (
-        |  SELECT doc_id, source,
-        |    ${sqlFold("'gsample:' || CAST(doc_id AS VARCHAR)")} AS ord
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, source,
-        |    CAST(row_number() OVER (PARTITION BY source ORDER BY ord, doc_id) AS BIGINT) AS rank
-        |  FROM h)
-        |SELECT doc_id, source, rank FROM r WHERE rank <= 5""".stripMargin)),
+      groupSampleOracle),
 
     // §2.24w — discrete EPOCH / repetition plan (r16, the
     // data-constrained-scaling schedule): whole epochs granted in
@@ -2751,9 +2743,9 @@ private[graft] object TextQueries {
        |  SELECT src AS doc_id, min(dst) AS cluster_id
        |  FROM reach GROUP BY src)""".stripMargin
 
-  private lazy val dupClustersClosureSql: String =
-    s"""WITH RECURSIVE $dupClustersClosureCtes
-       |SELECT doc_id, cluster_id FROM clusters""".stripMargin
+  private lazy val dupClustersOracle: Oracle =
+    sql(s"""WITH RECURSIVE $dupClustersClosureCtes
+       |SELECT doc_id, cluster_id FROM clusters""".stripMargin)
 
   /** Shared replay of the Bloom decontam probe: portable 8-gram folds,
     * the 64 Kibit double-hash filter built from the benchmark grams, and
@@ -3398,4 +3390,18 @@ private[graft] object TextQueries {
        |FROM cs x JOIN es y ON x.bucket = y.bucket
        |WHERE ${dd("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= 0.99""".stripMargin
   }
+
+  /** The per-source salted-hash top-5 replay — q_group_sample's oracle,
+    * which q_stream_gsample shares: bottom-k of a set re-derives from the
+    * streamed emission log. */
+  private[registry] lazy val groupSampleOracle: Oracle =
+    sql(s"""WITH h AS (
+      |  SELECT doc_id, source,
+      |    ${sqlFold("'gsample:' || CAST(doc_id AS VARCHAR)")} AS ord
+      |  FROM documents),
+      |r AS (
+      |  SELECT doc_id, source,
+      |    CAST(row_number() OVER (PARTITION BY source ORDER BY ord, doc_id) AS BIGINT) AS rank
+      |  FROM h)
+      |SELECT doc_id, source, rank FROM r WHERE rank <= 5""".stripMargin)
 }

@@ -169,17 +169,7 @@ private[graft] object VectorQueries {
       val e = Tables.embeddings(s, dir)
       Similarity.bruteForceTopK(e.where(col("vec_id") < 8), e, k = 5)
     },
-      sql("""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
-        |sims AS (
-        |  SELECT q.query_id, c.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(q.q_emb AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim
-        |  FROM embeddings c, q WHERE c.vec_id <> q.query_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, sim,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |  FROM sims)
-        |SELECT query_id, neighbor_id, rank, round(sim, 4) AS sim_r
-        |FROM ranked WHERE rank <= 5""".stripMargin)),
+      annTopKOracle),
 
     // §2.21q — top principal component by power iteration (the
     // training-side linear algebra of the embedding family): 6
@@ -423,17 +413,7 @@ private[graft] object VectorQueries {
       Similarity.int8TopK(e.where(col("vec_id") < 8), e, k = 5, prefilter = 4)
     },
       // identical to q_ann_topk's oracle: the int8 prefilter must be lossless
-      sql("""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
-        |sims AS (
-        |  SELECT q.query_id, c.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(q.q_emb AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim
-        |  FROM embeddings c, q WHERE c.vec_id <> q.query_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, sim,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |  FROM sims)
-        |SELECT query_id, neighbor_id, rank, round(sim, 4) AS sim_r
-        |FROM ranked WHERE rank <= 5""".stripMargin)),
+      annTopKOracle),
 
     // §2.21b — IVF ANN: deterministic coarse k-means cells, nprobe search.
     // Cell assignment is a native no-shuffle projection (NearestCells);
@@ -1363,4 +1343,20 @@ private[graft] object VectorQueries {
        |  $theoCase AS theo_bp
        |FROM t GROUP BY tier""".stripMargin
   }
+
+  /** The brute-force cosine top-5 replay — q_ann_topk's oracle, which
+    * q_ann_int8 shares: its int8 prefilter must lose no true top-k
+    * member. */
+  private lazy val annTopKOracle: Oracle =
+    sql("""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
+      |sims AS (
+      |  SELECT q.query_id, c.vec_id AS neighbor_id,
+      |    list_cosine_similarity(CAST(q.q_emb AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim
+      |  FROM embeddings c, q WHERE c.vec_id <> q.query_id),
+      |ranked AS (
+      |  SELECT query_id, neighbor_id, sim,
+      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS BIGINT) AS rank
+      |  FROM sims)
+      |SELECT query_id, neighbor_id, rank, round(sim, 4) AS sim_r
+      |FROM ranked WHERE rank <= 5""".stripMargin)
 }

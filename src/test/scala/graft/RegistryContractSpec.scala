@@ -62,6 +62,19 @@ class RegistryContractSpec extends AnyFunSuite {
     assert(registry.Registry.index(Seq(q)).keySet == Set("q_dup"))
   }
 
+  test("records whose oracles render the same SQL share one Oracle value") {
+    // a query whose rows must equal another's reuses that record's oracle
+    // value, so the two replays cannot drift apart
+    val norm = (t: String) => t.replaceAll("\\s+", " ").trim
+    val bySql = registry.Registry.byName.values.toSeq
+      .collect { case q @ registry.Query(_, _, o: registry.Sql) => norm(o.text) -> q }
+      .groupBy(_._1).values.map(_.map(_._2))
+    val copies = bySql.filter(rs => rs.exists(r => !(r.oracle eq rs.head.oracle)))
+      .map(_.map(_.name).sorted.mkString(" / ")).toSeq.sorted
+    assert(copies.isEmpty,
+      s"records holding separate copies of one oracle (share the value): $copies")
+  }
+
   private def fileText(name: String): String = {
     val f = Seq(name, s"../$name").map(new java.io.File(_)).find(_.exists)
       .getOrElse(fail(s"$name not found from the test working directory"))
